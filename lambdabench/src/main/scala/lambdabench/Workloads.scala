@@ -1,6 +1,7 @@
 package lambdabench
 
 import java.io.File
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
 
 import graft.Engine
 import graft.functions.{TextFunctions, TimeFunctions, UrlFunctions}
@@ -73,6 +74,20 @@ object Workload {
       s"unknown workload $other (one of ${names.mkString(", ")})")
   }
 
+  /** Run `tasks` at once, one thread each, and wait for all of them;
+    * rethrows the first failure. Set-up only: the measured window is
+    * one client thread.
+    */
+  def concurrently(tasks: Seq[() => Unit]): Unit = {
+    val pool = Executors.newFixedThreadPool(tasks.size)
+    try tasks.map(t => pool.submit(new Callable[Unit] { def call(): Unit = t() }))
+      .foreach(f => try f.get() catch { case e: ExecutionException => throw e.getCause })
+    finally {
+      pool.shutdownNow()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
+    }
+  }
+
   def timed[A](body: => A): (A, Long) = {
     val t0 = System.nanoTime()
     val r = body
@@ -142,7 +157,8 @@ final class BatchRecompute(ctx: Ctx) extends Workload {
     * corpus's verified near-duplicate pairs, its survivors and (traced
     * runs only) its candidate pair count.
     */
-  private def recompute(dir: String, master: String): (DataFrame, DataFrame, Long) = {
+  private def recompute(dir: String, master: String,
+      serving: String = root): (DataFrame, DataFrame, Long) = {
     import spark.implicits._
     val facts = FactStore.eventsAsFacts(spark, dir).toDF().unionByName(equivFacts(dir))
     tracer.write("factstore.ingest", master)(FactStore.ingest(facts.as[Fact], master))
@@ -189,8 +205,8 @@ final class BatchRecompute(ctx: Ctx) extends Workload {
     val survivorVecs = ctx.read("embeddings.parquet")
       .join(survivors.select(col("doc_id").as("vec_id")), "vec_id")
 
-    val version = tracer.write("servingpointer.stage", root) {
-      ServingPointer.stage(spark, root) { v =>
+    val version = tracer.write("servingpointer.stage", serving) {
+      ServingPointer.stage(spark, serving) { v =>
         pageviews.write.parquet(s"$v/pageviews")
         bounce.write.parquet(s"$v/bounce")
         cc.write.parquet(s"$v/components")
@@ -199,7 +215,7 @@ final class BatchRecompute(ctx: Ctx) extends Workload {
           survivorVecs, s"$v/vec", nCells = 16, m = 16, ks = 16))
       }
     }
-    tracer.write("servingpointer.flip", root)(ServingPointer.flip(spark, root, version))
+    tracer.write("servingpointer.flip", serving)(ServingPointer.flip(spark, serving, version))
     (pairs, survivors, roundCandidates)
   }
 
@@ -221,16 +237,22 @@ final class BatchRecompute(ctx: Ctx) extends Workload {
     Map("neardedup.verify_yield" -> (if (candidates == 0) 0.0 else verified.toDouble / candidates))
 
   /** Loads the corpus pipeline's quality model and serves a first
-    * version from the first round, which also brings every code path of
-    * a round up: a cold round varies several times more from run to run
-    * than a warm one.
+    * version from the first round. A second round on the other fact
+    * batch runs beside it, into a root of its own that is then dropped:
+    * the two bring every code path of a round up in about the time of
+    * one, and a round right after a single cold one still runs a tenth
+    * slower than the next.
     */
   def bootstrap(dir: String): Unit = {
     root = s"$dir/serving"
     val w = ctx.read("quality_model.parquet").orderBy("bucket").collect()
     model = QualityFilter.QualityModel(w.map(_.getAs[Double]("weight")),
       Tsv.rows(s"${ctx.inputs}/quality_intercept.tsv").head(0).toDouble, w.length)
-    recompute(rounds(n % rounds.size), s"$dir/master")
+    Workload.concurrently(Seq(
+      () => recompute(rounds(0), s"$dir/master"),
+      () => recompute(rounds(1 % rounds.size), s"$dir/master_warm", s"$dir/serving_warm")))
+    ctx.remove(s"$dir/master_warm")
+    ctx.remove(s"$dir/serving_warm")
     n += 1
   }
 
@@ -276,8 +298,8 @@ final class BatchRecompute(ctx: Ctx) extends Workload {
   * the store's maintenance and a read of a key from the batch through
   * the store's serving path. One operation is fold + maintain + that
   * read: the time until a folded row is visible. A run measures whole
-  * cycles over the four stores, starting with the first folds after
-  * the bootstrap.
+  * cycles over the four stores, starting with the second (the first
+  * runs in set-up).
   */
 final class SpeedFold(ctx: Ctx) extends Workload {
   import ctx.{spark, tracer}
@@ -300,16 +322,36 @@ final class SpeedFold(ctx: Ctx) extends Workload {
   private var up, lb, lex, vec = ""
   private var vecApplied = -1
 
+  /** Builds the four stores from the base inputs, two at a time in two
+    * threads, and folds each store's first micro-batch (with its
+    * maintenance and read) right after its build: the measured window
+    * starts with the second cycle, on stores whose code paths are up.
+    * Two threads, with their Spark tasks, leave room on a 4-core host
+    * for the JIT and GC threads; four threads took no less time.
+    */
   def bootstrap(dir: String): Unit = {
     up = s"$dir/upsert"; lb = s"$dir/labels"; lex = s"$dir/lex"; vec = s"$dir/vec"
-    tracer.write("upsertstore.fold", up)(
-      UpsertStore.fold(spark, up, ctx.read("upsert_base.parquet"), Keys, seq = 0))
-    tracer.write("labelstore.fold", lb)(LabelStore.fold(spark, lb, ctx.read("label_base.parquet")))
-    tracer.write("lexindex.build", lex)(
-      LexIndex.build(spark, ctx.read("lex_base.parquet"), lex, batchId = 0))
-    tracer.write("vectorindex.build", vec)(
-      VectorIndex.buildIvfPq(spark, ctx.read("vec_base.parquet"), vec,
-        nCells = 16, m = 16, ks = 16, batchId = 0))
+    val builds = Map[String, () => Unit](
+      "upsert" -> (() => tracer.write("upsertstore.fold", up)(
+        UpsertStore.fold(spark, up, ctx.read("upsert_base.parquet"), Keys, seq = 0))),
+      "label" -> (() => tracer.write("labelstore.fold", lb)(
+        LabelStore.fold(spark, lb, ctx.read("label_base.parquet")))),
+      "lex" -> (() => tracer.write("lexindex.build", lex)(
+        LexIndex.build(spark, ctx.read("lex_base.parquet"), lex, batchId = 0))),
+      "vec" -> (() => tracer.write("vectorindex.build", vec)(
+        VectorIndex.buildIvfPq(spark, ctx.read("vec_base.parquet"), vec,
+          nCells = 16, m = 16, ks = 16, batchId = 0))))
+    val firstCycle = ops.take(Stores)
+    require(firstCycle.map(_.store).sorted == builds.keys.toSeq.sorted,
+      "the first cycle of ops.tsv must fold once into every store")
+    Workload.concurrently(firstCycle.grouped(2).toSeq.map { pair => () =>
+      pair.foreach { op =>
+        builds(op.store)()
+        fold(op)
+        read(op)
+      }
+    })
+    next = Stores
   }
 
   def hasNext: Boolean = next < ops.size
