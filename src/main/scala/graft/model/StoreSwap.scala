@@ -3,9 +3,11 @@ package graft.model
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Crash-safe directory swap for parquet serving stores (the rebuilt
-  * batch-view hand-off: FactStore.consolidate, VectorIndex.consolidate,
-  * the stream_upsert/stream_cc foreachBatch maintainers).
+/** Crash-safe directory swap for parquet serving stores. Users:
+  * [[FactStore]] consolidation, [[ServingPointer]] (the pointer row),
+  * [[SeqStore]] (the ledger row of every append and the data rewrite of
+  * consolidate, under LexIndex, VectorIndex and ShingleStore), and the
+  * speed layer's UpsertStore and LabelStore maintainers.
   *
   * The naive `delete(store); rename(tmp, store)` has a window where the
   * serving store is ABSENT: a crash between the two calls loses the
@@ -100,7 +102,7 @@ object StoreSwap {
     * (`mapreduce.fileoutputcommitter.marksuccessfuljobs=false`), where
     * every committed write would otherwise read as torn and the
     * bootstrap probes built on this ([[committedPath]] →
-    * LexIndex/VectorIndex.isBuilt) would silently REBUILD a serving
+    * SeqStore.isBuilt) would silently REBUILD a serving
     * index from one micro-batch. Fallback for that conf: committed
     * data present (a non-hidden child) with NO `_temporary` job
     * staging left. The fallback cannot mistake a torn write for a
@@ -211,11 +213,11 @@ object StoreSwap {
   /** [[readablePath]] restricted to versions whose write COMMITTED (the
     * `_SUCCESS` marker): the probe for "has this store ever been built".
     * The distinction matters for stores whose FIRST version is written
-    * directly (not through a tmp swap — LexIndex/VectorIndex builds):
-    * a crash during that job leaves the directory existing with only
-    * `_temporary` staging inside, which a bare exists() misreads as
-    * built — bricking the retry behind a rebuild refusal, or routing a
-    * bootstrap fold to an append that dies reading the torn table.
+    * directly (not through a tmp swap): a crash during that job leaves
+    * the directory existing with only `_temporary` staging inside,
+    * which a bare exists() misreads as built — bricking the retry
+    * behind a rebuild refusal, or routing a bootstrap fold to an append
+    * that dies reading the torn table.
     * Each candidate is checked independently (an incomplete live dir
     * never hides a complete `.old`).
     */

@@ -1,9 +1,9 @@
 package graft.operators
 
 import graft.functions.TextFunctions._
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Persistent inverted (posting-list) index for lexical BM25 serving —
   * the lexical sibling of [[VectorIndex]], and the "posting-list index at
@@ -11,54 +11,16 @@ import org.apache.spark.sql.functions._
   * real code (reference analogue: the batch layer precomputing what
   * query time should not — BatchWorkflow.java's precomputed views).
   *
-  * Layout under `dir`:
+  * A [[graft.model.SeqStore]] (its scaladoc holds the crash story):
   *   - `postings/bucket=<pmod(xxhash64(t), nBuckets)>/seq=<n>/` —
   *     (t, doc_id, tf, dl): the document length rides DENORMALIZED on
   *     every posting (the norms-in-postings trick real engines use), so
-  *     query time never joins a corpus-sized doc-length table. The
-  *     second partition level is the APPEND SEQUENCE: batch n's
-  *     postings land under `seq=n` and become visible only once the
-  *     stats row records `max_seq >= n` (see the crash story).
-  *   - `stats/` — one row (n_docs, sum_dl, avgdl, n_buckets, max_seq,
-  *     last_batch): the corpus constants plus the store's recorded
-  *     bucket modulus, so reads are self-describing (no caller-supplied
-  *     nBuckets to get wrong — the UpsertStore sidecar lesson).
-  *
-  * == Crash story (round 13) ==
-  *
-  * `stats` is the ONE commit point for every mutation:
-  *
-  *   - [[build]] writes postings first, stats LAST — a crash mid-build
-  *     leaves an index that loudly reads as not-ready, never one that
-  *     silently scores under stale corpus constants.
-  *   - [[append]] writes batch n's postings under `seq=n` (untouched by
-  *     any reader: every read filters `seq <= stats.max_seq`), then
-  *     swaps in a stats row with `max_seq = n` via the crash-safe
-  *     [[graft.model.StoreSwap]] two-rename. A crash anywhere before
-  *     that swap lands leaves readers serving EXACTLY the old index —
-  *     partially-appended postings are invisible, not
-  *     partially-scored. Re-running the append first prunes the
-  *     orphaned `seq > max_seq` directories ([[recover]]) and then
-  *     re-appends, so a retry CONVERGES instead of double-counting tf
-  *     and df. LexIndexSpec kill-tests both crash points.
-  *   - A caller with a durable batch sequence (a streaming fold's
-  *     foreachBatch id) passes it as `batchId`; stats records the last
-  *     applied id and a REPLAY of an already-committed batch is a
-  *     no-op — exactly-once across maintainer restarts without relying
-  *     on the engine never re-delivering (`stream_lex_append`).
-  *   - [[consolidate]] rewrites through the whole-dir StoreSwap
-  *     protocol (complete postings at every intermediate state) and
-  *     every entry point finishes a predecessor's torn swap before
-  *     touching the store ([[recover]]).
-  *
-  * Reads resolve stats through [[graft.model.StoreSwap.committedPath]]
-  * (a first-build stats job that crashed mid-write leaves a
-  * _temporary-only dir, which must read as NOT BUILT — r14) and
-  * postings through [[graft.model.StoreSwap.readablePath]], applying
-  * the `seq <= max_seq` gate — correct against any crash state WITHOUT
-  * taking the writer's recovery lock; the single-WRITER contract (one
-  * maintainer owns build/append/consolidate) never has to cover
-  * readers.
+  *     query time never joins a corpus-sized doc-length table;
+  *   - `stats/` — the ledger row (n_docs, sum_dl, avgdl, n_buckets,
+  *     max_seq, last_batch): the corpus constants plus the store's
+  *     recorded bucket modulus, so reads are self-describing (no
+  *     caller-supplied nBuckets to get wrong — the UpsertStore sidecar
+  *     lesson).
   *
   * A query reads ONLY its terms' bucket partitions (partition-pruned
   * scan: ≤ |qTerms| of nBuckets directories, spec-pinned), filters to
@@ -77,8 +39,13 @@ import org.apache.spark.sql.functions._
   */
 object LexIndex {
 
-  private def postingsDir(dir: String) = s"$dir/postings"
-  private def statsDir(dir: String) = s"$dir/stats"
+  private[graft] val store = graft.model.SeqStore("lex index", "stats", "postings",
+    part = Some("bucket"), compactOrder = Seq("t", "doc_id"),
+    // the index's own FIXED postings shape, safe to hardcode (unlike
+    // ShingleStore's caller-shaped sidecar)
+    emptySchema = _ => Some(StructType(Seq(
+      StructField("doc_id", LongType), StructField("t", StringType),
+      StructField("tf", LongType), StructField("dl", DoubleType)))))
 
   val DefaultBuckets = 64
 
@@ -130,9 +97,6 @@ object LexIndex {
     */
   val DefaultMaxFilesPerBucket = 16
 
-  private def fs(spark: SparkSession) =
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-
   /** The query terms' bucket ids under the store's recorded modulus,
     * computed by evaluating the SAME Catalyst expressions the build's
     * bucket column uses (`Pmod(XxHash64(term), nBuckets)`) on the
@@ -150,29 +114,6 @@ object LexIndex {
         .asInstanceOf[Long]
     }.distinct
   }
-
-  /** The postings relation at `path` — or, when the directory holds no
-    * part files yet (an index legitimately bootstrapped from a ZERO-ROW
-    * first micro-batch writes none, and parquet cannot infer a schema
-    * from nothing), the empty relation with the index's FIXED postings
-    * shape, so reads serve empty results instead of an
-    * AnalysisException until data arrives. Unlike [[ShingleStore]]'s
-    * caller-shaped sidecar, this schema is the store's own — safe to
-    * hardcode.
-    */
-  private def postingsRelation(spark: SparkSession, path: String): DataFrame =
-    try spark.read.parquet(path)
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") =>
-        import org.apache.spark.sql.types._
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField("doc_id", LongType), StructField("t", StringType),
-            StructField("tf", LongType), StructField("dl", DoubleType),
-            StructField("bucket", IntegerType), StructField("seq", IntegerType))))
-    }
 
   /** Tokenize `docs` once and run `f` over the cached (doc_id, t, tf)
     * relation plus the materialized per-doc lengths. Without the cache,
@@ -203,19 +144,10 @@ object LexIndex {
   /** Build the index from `docs` (doc_id, text, …) into a dir that has
     * never COMMITTED a build. `batchId` (optional) records a durable
     * caller sequence id so a replayed bootstrap batch is skipped by the
-    * next [[append]] — see the crash story.
-    *
-    * Rebuilding over a BUILT index is refused loudly (r14, from r13
-    * ADVICE): the old overwrite path rewrote postings first and stats
-    * last with no swap between them, so a crash in that window left the
-    * OLD stats (reads as ready — stale n_docs/avgdl/max_seq) over torn
-    * NEW postings, and readers silently scored wrong instead of failing.
-    * Replacement corpora go to a fresh dir (every declared query and the
-    * stream fold already do — [[graft.Scratch.dir]]); in-place evolution
-    * is [[append]]/[[consolidate]], both single-commit-point. A TORN
-    * first build (postings staged, stats never committed) reads as
-    * not-built everywhere and is simply rebuilt here — the retry
-    * converges.
+    * next [[append]]. Rebuilding over a BUILT index is refused loudly
+    * (see [[graft.model.SeqStore]]): replacement corpora go to a fresh
+    * dir (every declared query and the stream fold already do —
+    * [[graft.Scratch.dir]]).
     */
   def build(spark: SparkSession, docs: DataFrame, dir: String,
       nBuckets: Int = 0, batchId: Long = -1L): Unit = {
@@ -228,135 +160,37 @@ object LexIndex {
       s"nBuckets must be >= 0 (0 = auto-size from corpus metadata), got $nBuckets")
     val buckets = if (nBuckets > 0) nBuckets else autoBuckets(spark, docs)
     require(buckets >= 1, s"need nBuckets >= 1, got $buckets")
-    // finish a predecessor's torn swap first, so "is there a committed
-    // stats row" is answered against the repaired state
-    graft.model.StoreSwap.commit(spark, statsDir(dir))
-    graft.model.StoreSwap.commit(spark, postingsDir(dir))
-    // COMMITTED probe, not bare existence: a crash during the first
-    // build's stats job leaves stats/ existing with only _temporary
-    // staging inside — that torn dir must be cleared and rebuilt, never
-    // refused (a bare exists() would brick the retry)
-    if (graft.model.StoreSwap.committedPath(spark, statsDir(dir)).isDefined)
-      sys.error(s"refusing to rebuild over the built index at $dir — " +
-        "write the replacement to a fresh dir, or maintain this one via " +
-        "append/consolidate (both crash-safe); rebuild-in-place has no " +
-        "atomic commit point")
-    fs(spark).delete(new Path(statsDir(dir)), true) // torn first-write leftover
+    store.create(spark, dir)
     withPostingRows(docs) { (posts, dl) =>
-      posts
-        .withColumn("bucket", pmod(xxhash64(col("t")), lit(buckets.toLong)))
-        .withColumn("seq", lit(0))
-        // co-locate each bucket's rows before the partitioned write — the
-        // discipline append always had. Without it every one of the tf
-        // join's shuffle partitions opened a writer in EVERY bucket dir
-        // (partitions × buckets part files per build — measured 4-8× the
-        // build wall at sf0.1, §6 small-files both ways: slow to commit,
-        // slow for every later read/recover listing).
-        .repartition(col("bucket"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("bucket", "seq")
-        .parquet(postingsDir(dir))
-      // a zero-row bootstrap batch writes NO part files; record the
-      // commit the way _SUCCESS would so markers-disabled sessions read
-      // the store as built, not torn (r17 verdict item 4)
-      graft.model.StoreSwap.sealIfEmpty(spark, postingsDir(dir))
-      // stats written LAST — it is the read path's entry point, so a crash
-      // mid-build leaves an index that loudly reads as not-ready rather
-      // than one that silently scores with stale corpus constants
+      store.writeLevel(spark, dir,
+        posts.withColumn("bucket", pmod(xxhash64(col("t")), lit(buckets.toLong))), 0)
       // coalesce: a zero-row bootstrap's sum/avg are NULL, and a null
       // sum_dl would poison every later append's running total (the
       // empty-bootstrap fold case — RecoverySpec)
-      dl.agg(count(lit(1)).as("n_docs"),
-          coalesce(sum("dl"), lit(0.0)).as("sum_dl"),
-          coalesce(avg("dl"), lit(0.0)).as("avgdl"),
-          lit(buckets).as("n_buckets"),
-          lit(0L).as("max_seq"), lit(batchId).as("last_batch"))
-        .repartition(1) // one row
-        .write.mode(SaveMode.Overwrite)
-        .parquet(statsDir(dir))
+      store.commitLedger(spark, dir, dl.agg(count(lit(1)).as("n_docs"),
+        coalesce(sum("dl"), lit(0.0)).as("sum_dl"),
+        coalesce(avg("dl"), lit(0.0)).as("avgdl"),
+        lit(buckets).as("n_buckets"),
+        lit(0L).as("max_seq"), lit(batchId).as("last_batch")))
     }
   }
 
-  /** Repair any torn mutation before the next write (driver-side
-    * metadata ops only; the single-writer's entry guard — reads don't
-    * need it, see the object scaladoc):
-    *
-    *   1. finish/roll back an interrupted stats or postings StoreSwap
-    *      (a complete version exists at every protocol state);
-    *   2. delete `seq >` stats.max_seq posting directories — the
-    *      orphans of an append that crashed before its stats commit
-    *      (readers never saw them; deleting them is what makes an
-    *      append RETRY converge instead of double-counting);
-    *   3. drop any `_temporary` job-staging leftover, so a crashed
-    *      append job's half-committed task files can never be merged
-    *      into a later job's commit.
+  /** Repair any torn mutation before the next write — the
+    * [[graft.model.SeqStore.recover]] entry guard.
     */
-  def recover(spark: SparkSession, dir: String): Unit = {
-    recoverAndReadStats(spark, dir)
-    ()
-  }
+  def recover(spark: SparkSession, dir: String): Unit = store.recover(spark, dir)
 
   /** Whether a COMMITTED build exists at `dir` — the bootstrap probe for
-    * an append loop (`stream_lex_append`'s fold). Resolves through a
-    * possibly-torn stats swap via
-    * [[graft.model.StoreSwap.committedPath]] — the same family of
-    * resolution every read path uses — so callers never duplicate the
-    * private stats layout (r13 ADVICE: the fold hardcoded `$dir/stats`
-    * and a layout change would have silently read "not built" forever,
-    * rebuilding from each batch). COMMITTED, not merely existing: a
-    * crash during the bootstrap build's stats job leaves a
-    * _temporary-only stats dir, which must read as not-built so the
-    * fold's replay rebuilds instead of crash-looping in append.
+    * an append loop (`stream_lex_append`'s fold), so callers never
+    * duplicate the private stats layout.
     */
-  def isBuilt(spark: SparkSession, dir: String): Boolean =
-    graft.model.StoreSwap.committedPath(spark, statsDir(dir)).isDefined
+  def isBuilt(spark: SparkSession, dir: String): Boolean = store.isBuilt(spark, dir)
 
-  /** The committed (max_seq, last_batch) watermark pair — the read-only
-    * monitoring/handoff probe (a rebuild catch-up replay checks the
-    * staged index's batch high-water mark through THIS, never by
-    * reading the private stats layout directly — the r13 ADVICE
-    * lesson). None if never built. Resolves through a possibly-torn
-    * stats swap like every read path.
+  /** The committed (max_seq, last_batch) watermark pair; None if never
+    * built.
     */
   def committedWatermarks(spark: SparkSession, dir: String): Option[(Long, Long)] =
-    graft.model.StoreSwap.committedPath(spark, statsDir(dir)).map { p =>
-      val r = graft.model.OneRowParquet.head(spark, p)
-      (r.getAs[Long]("max_seq"), r.getAs[Long]("last_batch"))
-    }
-
-  /** [[recover]], returning the (post-recovery) stats row so the append
-    * path pays ONE read of the one-row table, not two. None if the
-    * index has never been (completely) built.
-    */
-  private def recoverAndReadStats(spark: SparkSession,
-      dir: String): Option[org.apache.spark.sql.Row] = {
-    graft.model.StoreSwap.commit(spark, statsDir(dir))
-    graft.model.StoreSwap.commit(spark, postingsDir(dir))
-    val f = fs(spark)
-    val posts = new Path(postingsDir(dir))
-    // COMMITTED probe: a _temporary-only stats dir (first build crashed
-    // mid-stats-job) must read as not-built — loudly, from the callers'
-    // "index not built" error — not die inferring parquet schema here
-    if (graft.model.StoreSwap.committedPath(spark, statsDir(dir)).isEmpty) None
-    else {
-      val stats = graft.model.OneRowParquet.head(spark, statsDir(dir))
-      val maxSeq = stats.getAs[Long]("max_seq")
-      if (f.exists(posts)) f.listStatus(posts).foreach { b =>
-        val name = b.getPath.getName
-        if (name == "_temporary") f.delete(b.getPath, true)
-        else if (b.isDirectory && name.startsWith("bucket=")) {
-          f.listStatus(b.getPath).foreach { s =>
-            val sn = s.getPath.getName
-            if (sn == "_temporary") f.delete(s.getPath, true)
-            else if (s.isDirectory && sn.startsWith("seq=") &&
-                scala.util.Try(sn.stripPrefix("seq=").toLong).toOption.exists(_ > maxSeq))
-              f.delete(s.getPath, true)
-          }
-        }
-      }
-      Some(stats)
-    }
-  }
+    store.committedWatermarks(spark, dir)
 
   /** Append `docs` to an existing index — EXACT, unlike PQ append (no
     * codebooks to go stale): new postings land in their terms' buckets
@@ -365,164 +199,92 @@ object LexIndex {
     * query time from the postings themselves, and the corpus constants
     * merge from the running (n_docs, sum_dl) totals. build + append ≡
     * one build over the union — the declared query proves it against
-    * the direct form's oracle verbatim.
-    *
-    * CRASH-SAFE AND IDEMPOTENT (see the object scaladoc): the batch's
-    * postings are written under the next `seq=` partition — invisible to
-    * every reader until the stats swap records the new `max_seq` — so
-    * the stats two-rename is the single commit point; [[recover]] runs
-    * first, pruning any previous attempt's orphaned postings so a retry
-    * converges. Pass the caller's durable `batchId` (a foreachBatch id)
-    * to make a REPLAY of an already-committed batch a no-op.
+    * the direct form's oracle verbatim. Crash-safe and idempotent (see
+    * [[graft.model.SeqStore]]); pass the caller's durable `batchId` to
+    * make a REPLAY of an already-committed batch a no-op.
     */
   def append(spark: SparkSession, docs: DataFrame, dir: String,
-      batchId: Long = -1L): Unit = {
-    val prev = recoverAndReadStats(spark, dir)
-      .getOrElse(sys.error(s"no readable stats under ${statsDir(dir)} — index not built"))
-    if (graft.model.BatchLedger.isReplay(prev.getAs[Long]("last_batch"), batchId,
-        s"lex index $dir"))
-      return // exact replay of the committed batch: no-op (below-mark ids throw)
-    val nBuckets = prev.getAs[Int]("n_buckets")
-    val newSeq = prev.getAs[Long]("max_seq") + 1
-    withPostingRows(docs) { (posts, dl) =>
-      posts
-        .withColumn("bucket", pmod(xxhash64(col("t")), lit(nBuckets.toLong)))
-        .withColumn("seq", lit(newSeq.toInt))
-        // one file per touched bucket per batch — appends must not shed a
-        // file per shuffle partition per bucket, or the serving file count
-        // grows 32x faster than the maintenance policy assumes
-        .repartition(col("bucket"))
-        .write.mode(SaveMode.Append)
-        .partitionBy("bucket", "seq")
-        .parquet(postingsDir(dir))
-      // THE commit point: stats swaps in crash-safe (two-rename; a
-      // complete stats row exists at every intermediate state), and only
-      // this swap makes seq=newSeq visible to readers
-      // Option-read: a pre-r18 empty-bootstrap store recorded NULL
-      // totals (sum of zero rows); treat them as 0 so the running total
-      // self-heals on the first real append
-      val prevSum = Option(prev.getAs[java.lang.Double]("sum_dl"))
-        .fold(0.0)(_.doubleValue)
-      dl.agg(
-          (count(lit(1)) + lit(prev.getAs[Long]("n_docs"))).as("n_docs"),
-          (coalesce(sum("dl"), lit(0.0)) // empty batch: totals carry over
-            + lit(prevSum)).as("sum_dl"))
-        .select(col("n_docs"), col("sum_dl"),
-          (col("sum_dl") / col("n_docs")).as("avgdl"),
-          lit(nBuckets).as("n_buckets"),
-          lit(newSeq).as("max_seq"),
-          lit(math.max(prev.getAs[Long]("last_batch"), batchId)).as("last_batch"))
-        .repartition(1)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(graft.model.StoreSwap.tmpPath(statsDir(dir)))
-      graft.model.StoreSwap.commit(spark, statsDir(dir))
+      batchId: Long = -1L): Unit =
+    store.next(spark, dir, batchId).foreach { lv =>
+      val nBuckets = lv.prev.getAs[Int]("n_buckets")
+      withPostingRows(docs) { (posts, dl) =>
+        store.writeLevel(spark, dir,
+          posts.withColumn("bucket", pmod(xxhash64(col("t")), lit(nBuckets.toLong))), lv.seq)
+        // Option-read: an older empty-bootstrap store recorded NULL
+        // totals (sum of zero rows); treat them as 0 so the running total
+        // self-heals on the first real append
+        val prevSum = Option(lv.prev.getAs[java.lang.Double]("sum_dl"))
+          .fold(0.0)(_.doubleValue)
+        store.commitLedger(spark, dir, dl.agg(
+            (count(lit(1)) + lit(lv.prev.getAs[Long]("n_docs"))).as("n_docs"),
+            (coalesce(sum("dl"), lit(0.0)) // empty batch: totals carry over
+              + lit(prevSum)).as("sum_dl"))
+          .select(col("n_docs"), col("sum_dl"),
+            (col("sum_dl") / col("n_docs")).as("avgdl"),
+            lit(nBuckets).as("n_buckets"),
+            lit(lv.seq.toLong).as("max_seq"), lit(lv.lastBatch).as("last_batch")))
+      }
     }
-  }
 
-  /** Compact the postings in place (the [[VectorIndex.consolidate]]
-    * shape): repeated appends leave one file per batch per touched
-    * bucket, and a query then pays per-file open cost across its terms'
-    * buckets. Rewrites to one file per bucket partition (all committed
-    * `seq=` levels collapsed back to `seq=0` — every surviving row is
-    * `<= max_seq` by the [[recover]] prune, so the read gate still
-    * passes them) through the crash-safe
-    * [[graft.model.StoreSwap.commit]] two-rename — a complete postings
-    * table exists at every intermediate state. Offline maintenance: run
-    * between serving windows.
+  /** Compact the postings in place to one file per bucket partition,
+    * sorted by (t, doc_id) — [[graft.model.SeqStore.consolidate]].
+    * Offline maintenance: run between serving windows.
     */
-  def consolidate(spark: SparkSession, dir: String): Unit = {
-    // finish torn swaps, prune orphaned seq dirs (folding an orphan into
-    // the rewrite would silently commit it)
-    val maxSeq = recoverAndReadStats(spark, dir)
-      .getOrElse(sys.error(s"no readable stats under ${statsDir(dir)} — index not built"))
-      .getAs[Long]("max_seq")
-    postingsRelation(spark, postingsDir(dir))
-      .where(col("seq") <= lit(maxSeq.toInt)) // belt over recover's prune
-      .withColumn("seq", lit(0))
-      .repartition(col("bucket")).sortWithinPartitions("t", "doc_id")
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket", "seq")
-      .option("maxRecordsPerFile", 8L * 1000 * 1000)
-      .parquet(graft.model.StoreSwap.tmpPath(postingsDir(dir)))
-    graft.model.StoreSwap.commit(spark, postingsDir(dir))
-  }
+  def consolidate(spark: SparkSession, dir: String): Unit = store.consolidate(spark, dir)
 
-  /** Part-file count of the fullest bucket (driver metadata only —
-    * two-level listStatus over bucket and seq dirs, never a Spark job).
-    */
-  def maxFilesPerBucket(spark: SparkSession, dir: String): Int = {
-    val f = fs(spark)
-    graft.model.StoreSwap.readablePath(spark, postingsDir(dir)).map { root =>
-      val buckets = f.listStatus(new Path(root))
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("bucket="))
-      if (buckets.isEmpty) 0
-      else buckets.map { b =>
-        f.listStatus(b.getPath).map { s =>
-          if (s.isDirectory && s.getPath.getName.startsWith("seq="))
-            f.listStatus(s.getPath)
-              .count(st => st.isFile && !st.getPath.getName.startsWith("_"))
-          else if (s.isFile && !s.getPath.getName.startsWith("_")) 1
-          else 0
-        }.sum
-      }.max
-    }.getOrElse(0)
-  }
+  /** Part-file count of the fullest bucket (driver metadata only). */
+  def maxFilesPerBucket(spark: SparkSession, dir: String): Int =
+    store.maxFilesPerPartition(spark, dir)
 
-  /** Maintenance trigger — the [[graft.streaming.UpsertStore]]/
-    * [[graft.streaming.LabelStore]] policy mirrored onto the lexical index: true once any bucket has
-    * accumulated more than `maxFiles` posting files (each append adds
-    * ~1 per touched bucket). Cheap enough to call after every append;
-    * the single-writer contract says WHO gets to act on it.
+  /** Maintenance trigger: true once any bucket has accumulated more than
+    * `maxFiles` posting files (each append adds ~1 per touched bucket).
     */
   def needsCompact(spark: SparkSession, dir: String,
       maxFiles: Int = DefaultMaxFilesPerBucket): Boolean =
-    maxFilesPerBucket(spark, dir) > maxFiles
+    store.needsCompact(spark, dir, maxFiles)
 
   /** Run [[consolidate]] iff [[needsCompact]]; returns whether it ran.
     * The maintenance entry point for an append loop (e.g. the
     * `stream_lex_append` fold): call between batches, never under one.
     */
   def maintain(spark: SparkSession, dir: String,
-      maxFiles: Int = DefaultMaxFilesPerBucket): Boolean = {
-    val due = needsCompact(spark, dir, maxFiles)
-    if (due) consolidate(spark, dir)
-    due
+      maxFiles: Int = DefaultMaxFilesPerBucket): Boolean =
+    store.maintain(spark, dir, maxFiles)
+
+  /** The committed postings of `terms` (partition-pruned to their
+    * buckets and the live seq levels) with the corpus constants
+    * (n_docs, avgdl) they score under.
+    */
+  private def termPostings(spark: SparkSession, dir: String,
+      terms: Seq[String]): (DataFrame, Long, Double) = {
+    val (stats, postings) = store.read(spark, dir)
+    // the terms' buckets via the same expression classes the build used
+    // ([[termBuckets]]) — same hashing, no per-read probe job
+    val buckets = termBuckets(terms, stats.getAs[Int]("n_buckets").toLong)
+    (postings.where(col("bucket").isin(buckets: _*) && col("t").isin(terms: _*)),
+      stats.getAs[Long]("n_docs"), stats.getAs[Double]("avgdl"))
   }
+
+  /** One posting's BM25 contribution given its term's df. */
+  private def contrib(nDocs: Long, avgdl: Double) =
+    log((lit(nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1)) *
+      col("tf") * lit(2.2) /
+      (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / lit(avgdl)))
 
   /** BM25 (k1=1.2, b=0.75) scores of the indexed corpus against
     * `qTerms`: (doc_id, bm25 rounded to 4) — the [[TextOps.bm25Scores]]
     * contract served from the index. Reads only the query terms' bucket
-    * partitions, gated to the committed `seq <= max_seq` levels (both
-    * filters are partition pruning — uncommitted appends cost nothing
-    * and are invisible).
+    * partitions, gated to the committed seq levels (both filters are
+    * partition pruning — uncommitted appends cost nothing and are
+    * invisible).
     */
   def bm25Scores(spark: SparkSession, dir: String,
       qTerms: Seq[String]): DataFrame = {
     require(qTerms.nonEmpty, "need at least one query term")
-    // resolve through a possibly-interrupted swap: a complete stats (and
-    // postings) version exists at `dir` or `dir.old` at every protocol
-    // state
-    val statsPath = graft.model.StoreSwap.committedPath(spark, statsDir(dir))
-      .getOrElse(sys.error(s"no readable stats under ${statsDir(dir)} — index not built"))
-    val statsRow = graft.model.OneRowParquet.head(spark, statsPath)
-    val nDocs = statsRow.getAs[Long]("n_docs")
-    val avgdl = statsRow.getAs[Double]("avgdl")
-    val nBuckets = statsRow.getAs[Int]("n_buckets")
-    val maxSeq = statsRow.getAs[Long]("max_seq")
-    // the terms' buckets via the same expression classes the build used
-    // ([[termBuckets]]) — same hashing, no per-read probe job
-    val buckets = termBuckets(qTerms, nBuckets.toLong)
-    val postingsPath = graft.model.StoreSwap
-      .readablePath(spark, postingsDir(dir))
-      .getOrElse(sys.error(s"no readable postings under ${postingsDir(dir)}"))
-    val tfq = postingsRelation(spark, postingsPath)
-      .where(col("bucket").isin(buckets: _*) && col("seq") <= lit(maxSeq.toInt) &&
-        col("t").isin(qTerms: _*))
+    val (tfq, nDocs, avgdl) = termPostings(spark, dir, qTerms)
     val dfreq = tfq.groupBy("t").agg(count(lit(1)).as("df"))
     tfq.join(broadcast(dfreq), "t")
-      .withColumn("contrib",
-        log((lit(nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1))
-          * col("tf") * lit(2.2)
-          / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / lit(avgdl))))
+      .withColumn("contrib", contrib(nDocs, avgdl))
       .groupBy("doc_id").agg(round(sum("contrib"), 4).as("bm25"))
       .select(col("doc_id"), col("bm25"))
   }
@@ -580,21 +342,7 @@ object LexIndex {
     require(queries.map(_._1).distinct.size == queries.size,
       "query qids must be unique — duplicates would silently merge two " +
         "queries' term sets into one garbage score block")
-    val statsPath = graft.model.StoreSwap.committedPath(spark, statsDir(dir))
-      .getOrElse(sys.error(s"no readable stats under ${statsDir(dir)} — index not built"))
-    val statsRow = graft.model.OneRowParquet.head(spark, statsPath)
-    val nDocs = statsRow.getAs[Long]("n_docs")
-    val avgdl = statsRow.getAs[Double]("avgdl")
-    val nBuckets = statsRow.getAs[Int]("n_buckets")
-    val maxSeq = statsRow.getAs[Long]("max_seq")
-    val allTerms = queries.flatMap(_._2).distinct
-    val buckets = termBuckets(allTerms, nBuckets.toLong)
-    val postingsPath = graft.model.StoreSwap
-      .readablePath(spark, postingsDir(dir))
-      .getOrElse(sys.error(s"no readable postings under ${postingsDir(dir)}"))
-    val tfq = postingsRelation(spark, postingsPath)
-      .where(col("bucket").isin(buckets: _*) && col("seq") <= lit(maxSeq.toInt) &&
-        col("t").isin(allTerms: _*))
+    val (tfq, nDocs, avgdl) = termPostings(spark, dir, queries.flatMap(_._2).distinct)
     // df once per term — query-independent, so queries sharing a term
     // share its posting aggregate
     val dfreq = tfq.groupBy("t").agg(count(lit(1)).as("df"))
@@ -602,10 +350,7 @@ object LexIndex {
       .toDF("qid", "t")
     tfq.join(broadcast(dfreq), "t")
       .join(broadcast(qdf), "t") // fan out to the queries wanting this term
-      .withColumn("contrib",
-        log((lit(nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1))
-          * col("tf") * lit(2.2)
-          / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / lit(avgdl))))
+      .withColumn("contrib", contrib(nDocs, avgdl))
       .groupBy("qid", "doc_id").agg(round(sum("contrib"), 4).as("bm25"))
   }
 }

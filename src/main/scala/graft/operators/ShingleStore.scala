@@ -1,8 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions.shingleHashes
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persistent per-document shingle-hash signatures — the dedup-state
@@ -18,21 +17,16 @@ import org.apache.spark.sql.functions._
   * long arrays — no text, no tokenizer) and shingles ONLY the new
   * batch, which then lands in the store for the next night.
   *
-  * Layout under `dir` (the [[LexIndex]] crash story, minus buckets —
-  * pair generation consumes the whole relation, so there is no
-  * query-key to partition by):
-  *   - `sigs/seq=<n>/` — (doc_id, hs: array<long>): batch n's
-  *     signatures, visible only once stats records `max_seq >= n`.
-  *   - `stats/` — one row (n_docs, shingle_n, min_seq, max_seq,
-  *     last_batch, sidecar_cols): the single commit point. Build writes sigs first and stats
-  *     LAST; append writes under `seq = max_seq + 1` (invisible to
-  *     every reader) and commits by swapping stats through the
-  *     crash-safe [[graft.model.StoreSwap]] two-rename. A crash
-  *     anywhere before that swap leaves readers on EXACTLY the old
-  *     relation; a retry first prunes the orphaned `seq > max_seq`
-  *     dirs ([[recover]]) and converges. A caller with a durable batch
-  *     sequence passes `batchId` — replaying an already-committed
-  *     batch is a no-op (exactly-once across maintainer restarts).
+  * A [[graft.model.SeqStore]] without a partition column (pair
+  * generation consumes the whole relation, so there is no query key to
+  * partition by); its scaladoc holds the crash story:
+  *   - `sigs/seq=<n>/` — (doc_id, hs: array<long>, sidecar…): batch n's
+  *     signatures;
+  *   - `stats/` — the ledger row (n_docs, shingle_n, min_seq, max_seq,
+  *     last_batch, sidecar_cols, sigs_schema). `sigs_schema` makes an
+  *     EMPTY store readable: with zero part files parquet cannot infer
+  *     the relation's shape, so reads serve the recorded schema instead
+  *     of an AnalysisException until data lands.
   *
   * Signatures are computed by the SAME expression the recompute forms
   * use (`shingleHashes(text, n)`, null-signature docs dropped at
@@ -56,11 +50,11 @@ import org.apache.spark.sql.functions._
   */
 object ShingleStore {
 
-  private def sigsDir(dir: String) = s"$dir/sigs"
-  private def statsDir(dir: String) = s"$dir/stats"
-
-  private def fs(spark: SparkSession) =
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+  private[graft] val store = graft.model.SeqStore("shingle store", "stats", "sigs",
+    emptySchema = stats =>
+      if (!stats.schema.fieldNames.contains("sigs_schema")) None
+      else Some(org.apache.spark.sql.types.DataType.fromJson(stats.getAs[String]("sigs_schema"))
+        .asInstanceOf[org.apache.spark.sql.types.StructType]))
 
   /** The stored relation: EVERY doc (null-signature docs — fewer tokens
     * than the shingle width — are kept as null-`hs` rows so sidecar
@@ -76,167 +70,76 @@ object ShingleStore {
       sidecar.map { case (name, c) => c.as(name) }: _*)
 
   /** Build the store from `docs` into a dir that has never COMMITTED a
-    * build. Rebuilding over a built store is refused loudly (the
-    * [[LexIndex.build]] stance: rewrite-in-place has no atomic commit
-    * point — replacement corpora go to a fresh dir, evolution is
-    * [[append]]); a TORN first build reads as not-built and is simply
-    * rebuilt.
+    * build (rebuilding over a built store is refused, see
+    * [[graft.model.SeqStore]]).
     */
   def build(spark: SparkSession, docs: DataFrame, dir: String,
       n: Int = 3, batchId: Long = -1L,
       sidecar: Seq[(String, org.apache.spark.sql.Column)] = Nil): Unit = {
     require(n >= 1, s"need shingle width >= 1, got $n")
-    graft.model.StoreSwap.commit(spark, statsDir(dir))
-    graft.model.StoreSwap.commit(spark, sigsDir(dir))
-    if (graft.model.StoreSwap.committedPath(spark, statsDir(dir)).isDefined)
-      sys.error(s"refusing to rebuild over the built signature store at $dir — " +
-        "write the replacement to a fresh dir, or evolve this one via append")
-    fs(spark).delete(new Path(statsDir(dir)), true) // torn first-write leftover
+    store.create(spark, dir)
     val sigs = signatures(docs, n, sidecar)
-    // one shingle pass, one job; the batch count is read back from the
-    // footers of the level just written (exact, driver-side, zero jobs,
-    // SYNCHRONOUS — r18 verdict item 7: Observation.get waits on the
-    // async listener bus, the one wait class the CC loop already purged)
-    sigs.withColumn("seq", lit(0))
-      .write.mode(SaveMode.Overwrite).partitionBy("seq")
-      .parquet(sigsDir(dir))
-    val nDocs = graft.model.RowEst
-      .dirRowsExact(spark, sigsDir(dir) + "/seq=0")
-      .getOrElse(sigs.count()) // footer-read failure only: pay a job
-    // a zero-row bootstrap batch writes NO part files; record the commit
-    // the way _SUCCESS would so markers-disabled sessions don't read the
-    // store as torn (r17 verdict item 4 — the stream fold's live case)
-    graft.model.StoreSwap.sealIfEmpty(spark, sigsDir(dir))
-    // stats LAST — the read path's entry point, so a crash mid-build
-    // reads as not-built, never as a store with missing signatures.
-    // sigs_schema makes an EMPTY store readable: with zero part files
-    // parquet cannot infer the relation's shape, so [[read]] serves the
-    // recorded schema instead of an AnalysisException until data lands.
-    writeStats(spark, dir,
-      nDocs = nDocs, shingleN = n,
-      minSeq = 0L, maxSeq = 0L, lastBatch = batchId,
-      sidecarCols = sidecar.map(_._1).mkString(","),
-      sigsSchema = sigs.schema.json, overwriteInPlace = true)
+    store.writeLevel(spark, dir, sigs, 0)
+    writeStats(spark, dir, sigs, countLevel(spark, dir, 0, sigs), n,
+      minSeq = 0, maxSeq = 0, batchId, sidecar.map(_._1))
   }
 
-  /** The one-row stats table from driver-held values (every mutation's
-    * counts are read back from the written level's parquet footers —
-    * exact and synchronous). `overwriteInPlace` = the build's first
-    * write; appends/compactions stage at the StoreSwap tmp path and
-    * commit via the two-rename.
+  /** The batch count of level `seq`, read back from the footers of the
+    * level just written (exact, driver-side, zero jobs, SYNCHRONOUS —
+    * an Observation.get would wait on the async listener bus).
     */
-  private def writeStats(spark: SparkSession, dir: String, nDocs: Long,
-      shingleN: Int, minSeq: Long, maxSeq: Long, lastBatch: Long,
-      sidecarCols: String, sigsSchema: String,
-      overwriteInPlace: Boolean): Unit = {
+  private def countLevel(spark: SparkSession, dir: String, seq: Int,
+      rows: DataFrame): Long =
+    store.levelRows(spark, dir, seq)
+      .getOrElse(rows.count()) // footer-read failure only: pay a job
+
+  /** Commit the one-row stats table from driver-held values. `sigs_schema`
+    * is derived from the level's relation (pure schema, no execution).
+    */
+  private def writeStats(spark: SparkSession, dir: String, sigs: DataFrame,
+      nDocs: Long, shingleN: Int, minSeq: Int, maxSeq: Int, lastBatch: Long,
+      sidecarCols: Seq[String]): Unit = {
     import spark.implicits._
-    val target =
-      if (overwriteInPlace) statsDir(dir)
-      else graft.model.StoreSwap.tmpPath(statsDir(dir))
-    Seq((nDocs, shingleN, minSeq, maxSeq, lastBatch, sidecarCols, sigsSchema))
-      .toDF("n_docs", "shingle_n", "min_seq", "max_seq", "last_batch",
-        "sidecar_cols", "sigs_schema")
-      .repartition(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(target)
-    if (!overwriteInPlace) graft.model.StoreSwap.commit(spark, statsDir(dir))
+    store.commitLedger(spark, dir,
+      Seq((nDocs, shingleN, minSeq.toLong, maxSeq.toLong, lastBatch,
+          sidecarCols.mkString(","), sigs.schema.json))
+        .toDF("n_docs", "shingle_n", "min_seq", "max_seq", "last_batch",
+          "sidecar_cols", "sigs_schema"))
   }
 
-  /** Whether a COMMITTED build exists at `dir` — resolves through a
-    * possibly-torn stats swap like every read path.
-    */
-  def isBuilt(spark: SparkSession, dir: String): Boolean =
-    graft.model.StoreSwap.committedPath(spark, statsDir(dir)).isDefined
+  /** Whether a COMMITTED build exists at `dir`. */
+  def isBuilt(spark: SparkSession, dir: String): Boolean = store.isBuilt(spark, dir)
 
-  /** Repair any torn mutation, returning the post-recovery stats row
-    * (None if never completely built): finish interrupted swaps, prune
-    * `seq > max_seq` orphans and `_temporary` staging — the single-
-    * writer's entry guard, the [[LexIndex]] recovery shape.
+  /** Repair any torn mutation — the [[graft.model.SeqStore.recover]]
+    * entry guard.
     */
-  private def recoverAndReadStats(spark: SparkSession,
-      dir: String): Option[org.apache.spark.sql.Row] = {
-    graft.model.StoreSwap.commit(spark, statsDir(dir))
-    graft.model.StoreSwap.commit(spark, sigsDir(dir))
-    val f = fs(spark)
-    if (graft.model.StoreSwap.committedPath(spark, statsDir(dir)).isEmpty) None
-    else {
-      val stats = graft.model.OneRowParquet.head(spark, statsDir(dir))
-      val maxSeq = stats.getAs[Long]("max_seq")
-      val min = minSeq(stats)
-      val sigs = new Path(sigsDir(dir))
-      if (f.exists(sigs)) f.listStatus(sigs).foreach { s =>
-        val sn = s.getPath.getName
-        if (sn == "_temporary") f.delete(s.getPath, true)
-        else if (s.isDirectory && sn.startsWith("seq=") &&
-            scala.util.Try(sn.stripPrefix("seq=").toLong).toOption
-              // > max_seq: a crashed append/compaction's orphan;
-              // < min_seq: levels a committed compaction superseded
-              // (readers gate on [min_seq, max_seq], so both invisible)
-              .exists(v => v > maxSeq || v < min))
-          f.delete(s.getPath, true)
-      }
-      Some(stats)
-    }
-  }
-
-  /** The committed relation's LOWEST live seq level (0 until a
-    * compaction raises it). Tolerates pre-compaction stats rows.
-    */
-  private def minSeq(stats: org.apache.spark.sql.Row): Long =
-    if (stats.schema.fieldNames.contains("min_seq"))
-      stats.getAs[Long]("min_seq")
-    else 0L
-
-  def recover(spark: SparkSession, dir: String): Unit = {
-    recoverAndReadStats(spark, dir)
-    ()
-  }
+  def recover(spark: SparkSession, dir: String): Unit = store.recover(spark, dir)
 
   /** Append `docs`' signatures — EXACT (a signature is per-doc; nothing
-    * existing changes). Batch lands under the next `seq=` partition,
+    * existing changes). Batch lands under the next `seq=` level,
     * invisible until the stats swap commits; replaying an
     * already-committed `batchId` is a no-op. Shingle width comes from
     * the store's own stats, never the caller.
     */
   def append(spark: SparkSession, docs: DataFrame, dir: String,
       batchId: Long = -1L,
-      sidecar: Seq[(String, org.apache.spark.sql.Column)] = Nil): Unit = {
-    val prev = recoverAndReadStats(spark, dir)
-      .getOrElse(sys.error(s"no readable stats under ${statsDir(dir)} — store not built"))
-    if (graft.model.BatchLedger.isReplay(prev.getAs[Long]("last_batch"), batchId,
-        s"shingle store $dir"))
-      return // exact replay of the committed batch: no-op (below-mark ids throw)
-    // the appended batch must carry exactly the store's sidecar shape —
-    // a parquet schema-union would silently null-fill the mismatch and a
-    // later sidecar read would serve holes as data
-    val storedSidecar = sidecarCols(prev)
-    require(sidecar.map(_._1) == storedSidecar,
-      s"sidecar mismatch on append to $dir: store carries " +
-        s"[${storedSidecar.mkString(",")}], batch supplies " +
-        s"[${sidecar.map(_._1).mkString(",")}]")
-    val n = prev.getAs[Int]("shingle_n")
-    val newSeq = prev.getAs[Long]("max_seq") + 1
-    val sigs = signatures(docs, n, sidecar)
-    // one shingle pass, one job; batch count read back from the new
-    // level's footers — synchronous, no listener-bus wait (r18 item 7)
-    sigs.withColumn("seq", lit(newSeq.toInt))
-      .write.mode(SaveMode.Append).partitionBy("seq")
-      .parquet(sigsDir(dir))
-    val batchDocs = graft.model.RowEst
-      .dirRowsExact(spark, sigsDir(dir) + s"/seq=$newSeq")
-      .getOrElse(sigs.count()) // footer-read failure only: pay a job
-    graft.model.StoreSwap.sealIfEmpty(spark, sigsDir(dir))
-    // THE commit point: the stats swap makes seq=newSeq visible.
-    // sigs_schema is re-derived from the batch relation (pure schema,
-    // no execution — identical by the sidecar-shape check above), which
-    // also upgrades pre-schema stats rows on their first append.
-    writeStats(spark, dir,
-      nDocs = batchDocs + prev.getAs[Long]("n_docs"),
-      shingleN = n, minSeq = minSeq(prev), maxSeq = newSeq,
-      lastBatch = math.max(prev.getAs[Long]("last_batch"), batchId),
-      sidecarCols = storedSidecar.mkString(","),
-      sigsSchema = sigs.schema.json, overwriteInPlace = false)
-  }
+      sidecar: Seq[(String, org.apache.spark.sql.Column)] = Nil): Unit =
+    store.next(spark, dir, batchId).foreach { lv =>
+      // the appended batch must carry exactly the store's sidecar shape —
+      // a parquet schema-union would silently null-fill the mismatch and a
+      // later sidecar read would serve holes as data
+      val storedSidecar = sidecarCols(lv.prev)
+      require(sidecar.map(_._1) == storedSidecar,
+        s"sidecar mismatch on append to $dir: store carries " +
+          s"[${storedSidecar.mkString(",")}], batch supplies " +
+          s"[${sidecar.map(_._1).mkString(",")}]")
+      val n = lv.prev.getAs[Int]("shingle_n")
+      val sigs = signatures(docs, n, sidecar)
+      store.writeLevel(spark, dir, sigs, lv.seq)
+      writeStats(spark, dir, sigs,
+        countLevel(spark, dir, lv.seq, sigs) + lv.prev.getAs[Long]("n_docs"), n,
+        graft.model.SeqStore.minSeq(lv.prev).toInt, lv.seq, lv.lastBatch, storedSidecar)
+    }
 
   /** Compaction trigger + action (the [[LexIndex.maintain]] policy on
     * the dedup-state store): a streamed fold ([[append]] per micro-
@@ -244,48 +147,30 @@ object ShingleStore {
     * eventually pays per-level file-listing and small-file overhead for
     * state that never changes. When the live level count exceeds
     * `maxSeqDirs`, rewrite the whole committed relation into ONE fresh
-    * level and retire the old ones — crash-safe under the same protocol
-    * as append: the compacted level lands at `max_seq + 1` (invisible —
-    * readers gate on `[min_seq, max_seq]`), the stats two-rename
-    * committing `min_seq = max_seq = max_seq + 1` is the single flip,
-    * and a crash anywhere leaves readers on exactly the old levels (a
-    * retry re-compacts after [[recover]] prunes the orphan). Retired
+    * level at `max_seq + 1` and commit `min_seq = max_seq = max_seq + 1`
+    * in one stats swap — crash-safe under the append protocol. Retired
     * levels are NOT deleted here: a reader that resolved stats just
     * before the swap is still mid-scan over them, and [[read]] has no
     * vanished-file retry (it returns a lazy plan — the miss would
     * surface as a task-time FileNotFoundException long after any
     * retry wrapper here returned). They are already invisible to every
-    * new reader (the `[min_seq, max_seq]` gate partition-prunes them),
-    * so they cost only disk until the NEXT maintainer entry —
-    * append/maintain/recover's entry recovery prunes `seq < min_seq` —
-    * which is the grace window: a read that outlives one full
-    * maintenance interval is the remaining (documented) hazard, the
+    * new reader, so they cost only disk until the NEXT maintainer entry
+    * prunes `seq < min_seq` — the grace window: a read that outlives one
+    * full maintenance interval is the remaining (documented) hazard, the
     * same one-interval contract ServingPointer.dropSuperseded gives
     * version dirs. No-op below the trigger. Returns true when a
     * compaction ran.
     */
   def maintain(spark: SparkSession, dir: String, maxSeqDirs: Int = 8): Boolean = {
-    val prev = recoverAndReadStats(spark, dir)
-      .getOrElse(sys.error(s"no readable stats under ${statsDir(dir)} — store not built"))
-    val liveLevels = prev.getAs[Long]("max_seq") - minSeq(prev) + 1
+    val prev = store.committed(spark, dir)
+    val liveLevels = prev.getAs[Long]("max_seq") - graft.model.SeqStore.minSeq(prev) + 1
     if (liveLevels <= maxSeqDirs) return false
-    val newSeq = prev.getAs[Long]("max_seq") + 1
+    val seq = store.nextSeq(prev, dir)
     val committed = read(spark, dir)
-    committed
-      .withColumn("seq", lit(newSeq.toInt))
-      .write.mode(SaveMode.Append).partitionBy("seq")
-      .parquet(sigsDir(dir))
-    graft.model.StoreSwap.sealIfEmpty(spark, sigsDir(dir))
-    // THE commit point: one swap moves the whole window to the new level
-    writeStats(spark, dir,
-      nDocs = prev.getAs[Long]("n_docs"),
-      shingleN = prev.getAs[Int]("shingle_n"),
-      minSeq = newSeq, maxSeq = newSeq,
-      lastBatch = prev.getAs[Long]("last_batch"),
-      sidecarCols = sidecarCols(prev).mkString(","),
-      sigsSchema = committed.schema.json, overwriteInPlace = false)
-    // retired levels stay on disk until the next maintainer entry prunes
-    // them (grace window for in-flight readers — see the scaladoc)
+    store.writeLevel(spark, dir, committed, seq)
+    writeStats(spark, dir, committed, prev.getAs[Long]("n_docs"),
+      prev.getAs[Int]("shingle_n"), minSeq = seq, maxSeq = seq,
+      prev.getAs[Long]("last_batch"), sidecarCols(prev))
     true
   }
 
@@ -297,9 +182,7 @@ object ShingleStore {
     else Option(stats.getAs[String]("sidecar_cols"))
       .filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Nil)
 
-  /** The committed (doc_id, hs) relation — resolves stats through
-    * [[graft.model.StoreSwap.committedPath]] and sigs through
-    * [[graft.model.StoreSwap.readablePath]], gated to `seq <= max_seq`
+  /** The committed (doc_id, hs) relation, gated to the live seq levels
     * (partition pruning: uncommitted appends cost nothing and are
     * invisible). This is the scan the nightly dedup reads INSTEAD of
     * re-shingling the corpus: long arrays only, no text column.
@@ -312,39 +195,12 @@ object ShingleStore {
   /** The full committed store relation — (doc_id, hs, sidecar…), null-
     * signature docs INCLUDED (a doc too short to shingle still has its
     * sidecar values; keep-best must score it as a singleton). Same
-    * commit resolution and `seq <= max_seq` partition pruning as
+    * commit resolution and live-level partition pruning as
     * [[hashes]]; consumers that touch only (doc_id, sidecar) columns
     * never read the hash arrays (parquet column pruning).
     */
   def read(spark: SparkSession, dir: String): DataFrame = {
-    val statsPath = graft.model.StoreSwap.committedPath(spark, statsDir(dir))
-      .getOrElse(sys.error(s"no readable stats under ${statsDir(dir)} — store not built"))
-    val stats = graft.model.OneRowParquet.head(spark, statsPath)
-    val maxSeq = stats.getAs[Long]("max_seq")
-    val sigsPath = graft.model.StoreSwap.readablePath(spark, sigsDir(dir))
-      .getOrElse(sys.error(s"no readable sigs under ${sigsDir(dir)}"))
-    val sigs =
-      try spark.read.parquet(sigsPath)
-      catch {
-        // a store legitimately bootstrapped from a ZERO-ROW first batch
-        // has no part files, so parquet has no schema to infer — serve
-        // the empty relation with the schema the build recorded instead
-        // of erroring until data arrives (any marker mode)
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") &&
-              stats.schema.fieldNames.contains("sigs_schema") =>
-          val recorded = org.apache.spark.sql.types.DataType
-            .fromJson(stats.getAs[String]("sigs_schema"))
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-            .add("seq", org.apache.spark.sql.types.IntegerType)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], recorded)
-      }
-    sigs
-      // [min_seq, max_seq]: above = uncommitted appends/compactions,
-      // below = levels a committed compaction retired — both invisible
-      // (partition pruning: neither costs a read)
-      .where(col("seq").between(lit(minSeq(stats).toInt), lit(maxSeq.toInt)))
-      .select((col("doc_id") +: col("hs") +: sidecarCols(stats).map(col)): _*)
+    val (stats, sigs) = store.read(spark, dir)
+    sigs.select((col("doc_id") +: col("hs") +: sidecarCols(stats).map(col)): _*)
   }
 }

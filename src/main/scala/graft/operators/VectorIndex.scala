@@ -25,14 +25,9 @@ import org.apache.spark.sql.functions._
   * does; rebuilding is a policy decision (track residual magnitudes),
   * not something an append should silently trigger.
   *
-  * Crash story (round 13 — the [[LexIndex]] discipline): the one-row
-  * `meta` table (max_seq, last_batch) is the single commit point for
-  * every mutation. Appends land under an uncommitted `seq=` partition
-  * that searches — gated on `seq <= meta.max_seq` — cannot see until
-  * the meta StoreSwap lands; [[recover]] prunes orphaned partitions so
-  * an append RETRY converges instead of double-inserting; a caller's
-  * durable batchId recorded in meta makes replays of committed batches
-  * no-ops. [[maintain]] is the files-per-cell compaction trigger.
+  * The codes table and the one-row `meta` ledger (max_seq, last_batch)
+  * form a [[graft.model.SeqStore]], whose scaladoc holds the crash
+  * story; [[maintain]] is the files-per-cell compaction trigger.
   *
   * MIGRATION (deliberate): indexes persisted by pre-r13 binaries — no
   * `meta` table, codes partitioned by `cell` only, no `seq` level — are
@@ -52,17 +47,14 @@ import org.apache.spark.sql.functions._
   */
 object VectorIndex {
 
-  private def codesDir(dir: String) = dir + "/codes"
+  private[graft] val store = graft.model.SeqStore("vector index", "meta", "codes",
+    part = Some("cell"))
   private def booksDir(dir: String) = dir + "/codebooks"
-  private def metaDir(dir: String) = dir + "/meta"
 
   /** Part files a cell may hold before [[needsCompact]] fires — each
     * append adds ~1 file per touched cell.
     */
   val DefaultMaxFilesPerCell = 16
-
-  private def fs(spark: SparkSession) =
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
 
   /** Build the index at `dir` — a dir that has never COMMITTED a build:
     * trains on `emb` (bounded by `maxTrainRows`), writes cell-partitioned
@@ -73,15 +65,10 @@ object VectorIndex {
     * by the next [[appendIvfPq]]. Shapes auto-size from the corpus like
     * the in-query form.
     *
-    * Rebuilding over a BUILT index is refused loudly (r14, from r13
-    * ADVICE): overwriting codes/codebooks before the meta write has no
-    * commit point — a crash in that window left OLD meta (reads as
-    * ready) over NEW codes, or worse old codes under freshly-retrained
-    * codebooks, and searches silently decoded wrong. Retrain-and-replace
-    * (quantizer drift policy) goes to a fresh dir and flips the serving
-    * pointer; in-place evolution is [[appendIvfPq]]/[[consolidate]]. A
-    * TORN first build (codes/books staged, meta never committed) reads
-    * as not-built and is simply rebuilt here — the retry converges.
+    * Rebuilding over a BUILT index is refused loudly (see
+    * [[graft.model.SeqStore]]): retrain-and-replace (quantizer drift
+    * policy) goes to a fresh dir and flips the serving pointer; in-place
+    * evolution is [[appendIvfPq]]/[[consolidate]].
     */
   /** `localCoarseTrain = true` trains the coarse quantizer with the
     * driver-local seeded k-means ([[VectorOps.trainQuantizerLocal]]) —
@@ -94,19 +81,7 @@ object VectorIndex {
       maxTrainRows: Long = 100000L, nRows: Long = 0L,
       batchId: Long = -1L, localCoarseTrain: Boolean = false): Unit = {
     import spark.implicits._
-    // repair a torn predecessor swap, then answer "has a build ever
-    // COMMITTED" against the repaired state — committed probe, not bare
-    // existence: a crash during the first build's meta job leaves meta/
-    // existing with only _temporary staging inside, and that torn dir
-    // must be cleared and rebuilt, never refused
-    graft.model.StoreSwap.commit(spark, metaDir(dir))
-    graft.model.StoreSwap.commit(spark, codesDir(dir))
-    if (graft.model.StoreSwap.committedPath(spark, metaDir(dir)).isDefined)
-      sys.error(s"refusing to rebuild over the built index at $dir — " +
-        "write the retrained replacement to a fresh dir and flip the " +
-        "serving pointer, or maintain this one via appendIvfPq/consolidate " +
-        "(both crash-safe); rebuild-in-place has no atomic commit point")
-    fs(spark).delete(new org.apache.hadoop.fs.Path(metaDir(dir)), true) // torn first-write leftover
+    store.create(spark, dir)
     // n gates only the auto-shape sizing and the train-sample decision,
     // and an EXACT metadata count preserves both bit-for-bit — parquet
     // footers answer it with zero jobs on preservation-only plans
@@ -127,16 +102,7 @@ object VectorIndex {
     val books = VectorOps.trainPqCodebooks(
       assigned.select(col("residual").as("embedding")), mSub, kCent, dims,
       maxTrainRows, n)
-    VectorOps.ivfPqEncode(assigned, books)
-      .withColumn("seq", lit(0))
-      // one file per cell (the discipline appendIvfPq/consolidate always
-      // had): without this every encode shuffle partition opened a writer
-      // in every cell dir — partitions × cells part files per build, paid
-      // again by every probed-cell read until the first consolidate
-      .repartition(col("cell"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cell", "seq")
-      .parquet(codesDir(dir))
+    store.writeLevel(spark, dir, VectorOps.ivfPqEncode(assigned, books), 0)
     val coarseRows = centroidArr.zipWithIndex.map { case (v, i) =>
       ("coarse", 0, i, v.toSeq)
     }
@@ -148,78 +114,24 @@ object VectorIndex {
       .toDF("kind", "sub", "idx", "vec")
       .repartition(1) // broadcast-sized side table: one file
       .write.mode(SaveMode.Overwrite).parquet(booksDir(dir))
-    Seq((0L, batchId)).toDF("max_seq", "last_batch")
-      .repartition(1)
-      .write.mode(SaveMode.Overwrite).parquet(metaDir(dir))
+    store.commitLedger(spark, dir, Seq((0L, batchId)).toDF("max_seq", "last_batch"))
   }
 
-  /** Repair any torn mutation before the next write (driver-side
-    * metadata only — the [[LexIndex.recover]] discipline on the vector
-    * side): finish interrupted meta/codes StoreSwaps, then delete
-    * `seq >` meta.max_seq code directories (orphans of an append that
-    * crashed before its meta commit — readers never saw them, and
-    * pruning them is what makes a RETRY converge instead of
-    * double-inserting ids) and `_temporary` job-staging leftovers.
+  /** Repair any torn mutation before the next write — the
+    * [[graft.model.SeqStore.recover]] entry guard.
     */
-  def recover(spark: SparkSession, dir: String): Unit = {
-    recoverAndReadMeta(spark, dir)
-    ()
-  }
+  def recover(spark: SparkSession, dir: String): Unit = store.recover(spark, dir)
 
   /** Whether a COMMITTED build exists at `dir` — the bootstrap probe for
-    * an append loop (`stream_vec_append`'s fold), resolving through a
-    * possibly-torn meta swap the way every read path does (the
-    * [[LexIndex.isBuilt]] pairing — callers never duplicate the private
-    * meta layout).
+    * an append loop (`stream_vec_append`'s fold).
     */
-  def isBuilt(spark: SparkSession, dir: String): Boolean =
-    graft.model.StoreSwap.committedPath(spark, metaDir(dir)).isDefined
+  def isBuilt(spark: SparkSession, dir: String): Boolean = store.isBuilt(spark, dir)
 
-  /** The committed (max_seq, last_batch) watermark pair — the read-only
-    * monitoring/handoff probe ([[LexIndex.committedWatermarks]] on the
-    * vector side): a rebuild catch-up replay checks the staged index's
-    * batch high-water mark through this, never the private meta layout.
-    * None if never built.
+  /** The committed (max_seq, last_batch) watermark pair; None if never
+    * built.
     */
   def committedWatermarks(spark: SparkSession, dir: String): Option[(Long, Long)] =
-    graft.model.StoreSwap.committedPath(spark, metaDir(dir)).map { p =>
-      val r = graft.model.OneRowParquet.head(spark, p)
-      (r.getAs[Long]("max_seq"), r.getAs[Long]("last_batch"))
-    }
-
-  /** [[recover]], returning the (post-recovery) meta row so the append
-    * path pays ONE read of the one-row table, not two. None if the
-    * index has never been (completely) built.
-    */
-  private def recoverAndReadMeta(spark: SparkSession,
-      dir: String): Option[org.apache.spark.sql.Row] = {
-    graft.model.StoreSwap.commit(spark, metaDir(dir))
-    graft.model.StoreSwap.commit(spark, codesDir(dir))
-    val f = fs(spark)
-    val codes = new org.apache.hadoop.fs.Path(codesDir(dir))
-    // COMMITTED probe: a _temporary-only meta dir (first build crashed
-    // mid-meta-job) must read as not-built — loudly, via the callers'
-    // "index not built" error — not die inferring parquet schema here
-    if (graft.model.StoreSwap.committedPath(spark, metaDir(dir)).isEmpty) None
-    else {
-      val meta = graft.model.OneRowParquet.head(spark, metaDir(dir))
-      val maxSeq = meta.getAs[Long]("max_seq")
-      if (f.exists(codes)) f.listStatus(codes).foreach { c =>
-        val name = c.getPath.getName
-        if (name == "_temporary") f.delete(c.getPath, true)
-        else if (c.isDirectory && name.startsWith("cell=")) {
-          f.listStatus(c.getPath).foreach { s =>
-            val sn = s.getPath.getName
-            if (sn == "_temporary") f.delete(s.getPath, true)
-            else if (s.isDirectory && sn.startsWith("seq=") &&
-                scala.util.Try(sn.stripPrefix("seq=").toLong).toOption.exists(_ > maxSeq))
-              f.delete(s.getPath, true)
-          }
-        }
-      }
-      Some(meta)
-    }
-  }
+    store.committedWatermarks(spark, dir)
 
   /** (coarse centroids, PQ codebooks) read back from `dir` — float-exact,
     * so encoding with them is bit-identical to the build pass.
@@ -307,17 +219,10 @@ object VectorIndex {
     * are written (into their cells' partition directories); existing
     * files and codebooks are untouched.
     *
-    * CRASH-SAFE AND IDEMPOTENT since round 13 (the [[LexIndex.append]]
-    * discipline — previously the one remaining store append without
-    * it): the batch's codes land under the next uncommitted `seq=`
-    * partition, invisible to [[searchIvfPq]] until the one-row `meta`
-    * table swaps in the new `max_seq` through the crash-safe
-    * [[graft.model.StoreSwap]] two-rename — a crash anywhere before
-    * that swap leaves searches serving EXACTLY the old index, and
-    * [[recover]] prunes the orphaned partitions so a retry converges
-    * instead of double-inserting the batch's ids. Pass the caller's
-    * durable `batchId` (a foreachBatch id) to make a REPLAY of an
-    * already-committed batch a no-op.
+    * Crash-safe and idempotent (see [[graft.model.SeqStore]]): the
+    * batch's codes land under the next uncommitted `seq=` level. Pass
+    * the caller's durable `batchId` (a foreachBatch id) to make a REPLAY
+    * of an already-committed batch a no-op.
     *
     * Append-only semantics otherwise, like `FactStore.ingest` (and the
     * reference's Pail.absorb): appending an id in two DIFFERENT batches
@@ -329,29 +234,14 @@ object VectorIndex {
   def appendIvfPq(spark: SparkSession, newEmb: DataFrame, dir: String,
       batchId: Long = -1L): Unit = {
     import spark.implicits._
-    val prev = recoverAndReadMeta(spark, dir)
-      .getOrElse(sys.error(s"no readable meta under ${metaDir(dir)} — index not built"))
-    if (graft.model.BatchLedger.isReplay(prev.getAs[Long]("last_batch"), batchId,
-        s"vector index $dir"))
-      return // exact replay of the committed batch: no-op (below-mark ids throw)
-    val newSeq = prev.getAs[Long]("max_seq") + 1
-    val (coarse, books) = readCodebooks(spark, dir)
-    val unitEmb = VectorOps.withUnit(newEmb, "embedding", "unit")
-    VectorOps.ivfPqEncode(VectorOps.ivfPqAssign(spark, unitEmb, coarse), books)
-      .withColumn("seq", lit(newSeq.toInt))
-      // one file per touched cell per batch (the maintenance policy's
-      // cost model), not one per shuffle partition per cell
-      .repartition(col("cell"))
-      .write.mode(SaveMode.Append)
-      .partitionBy("cell", "seq")
-      .parquet(codesDir(dir))
-    // THE commit point: only this swap makes seq=newSeq visible
-    Seq((newSeq, math.max(prev.getAs[Long]("last_batch"), batchId)))
-      .toDF("max_seq", "last_batch")
-      .repartition(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(graft.model.StoreSwap.tmpPath(metaDir(dir)))
-    graft.model.StoreSwap.commit(spark, metaDir(dir))
+    store.next(spark, dir, batchId).foreach { lv =>
+      val (coarse, books) = readCodebooks(spark, dir)
+      val unitEmb = VectorOps.withUnit(newEmb, "embedding", "unit")
+      store.writeLevel(spark, dir,
+        VectorOps.ivfPqEncode(VectorOps.ivfPqAssign(spark, unitEmb, coarse), books), lv.seq)
+      store.commitLedger(spark, dir,
+        Seq((lv.seq.toLong, lv.lastBatch)).toDF("max_seq", "last_batch"))
+    }
   }
 
   /** Compact the codes table in place (Pail.consolidate for the index,
@@ -361,46 +251,15 @@ object VectorIndex {
     * Rewrites to one file per cell partition — at the √n cell sizing a
     * cell's codes are a few MB even at 10⁹ rows (m bytes/row), and an
     * oversized cell can still split via `maxRecordsPerFile`. The row
-    * multiset — and therefore every search answer — is unchanged. The
-    * swap is the crash-safe [[graft.model.StoreSwap.commit]] two-rename
-    * protocol: a complete codes table exists at every intermediate
-    * state. Like the FactStore form this is an offline maintenance
-    * pass: run it between serving windows, not under live readers.
+    * multiset — and therefore every search answer — is unchanged
+    * ([[graft.model.SeqStore.consolidate]]). Offline maintenance: run it
+    * between serving windows, not under live readers.
     */
-  def consolidate(spark: SparkSession, dir: String): Unit = {
-    // self-heal a predecessor's mid-swap crash and prune any orphaned
-    // uncommitted append before reading — folding an orphan into the
-    // rewrite would silently commit it
-    val maxSeq = recoverAndReadMeta(spark, dir)
-      .getOrElse(sys.error(s"no readable meta under ${metaDir(dir)} — index not built"))
-      .getAs[Long]("max_seq")
-    spark.read.parquet(codesDir(dir))
-      .where(col("seq") <= lit(maxSeq.toInt)) // belt over recover's prune
-      .withColumn("seq", lit(0)) // collapse committed levels back to 0
-      .repartition(col("cell")) // all of a cell's rows → one writer → one file
-      .write.mode(SaveMode.Overwrite).partitionBy("cell", "seq")
-      .parquet(graft.model.StoreSwap.tmpPath(codesDir(dir)))
-    graft.model.StoreSwap.commit(spark, codesDir(dir))
-  }
+  def consolidate(spark: SparkSession, dir: String): Unit = store.consolidate(spark, dir)
 
   /** Part-file count of the fullest cell (driver metadata only). */
-  def maxFilesPerCell(spark: SparkSession, dir: String): Int = {
-    val f = fs(spark)
-    graft.model.StoreSwap.readablePath(spark, codesDir(dir)).map { root =>
-      val cells = f.listStatus(new org.apache.hadoop.fs.Path(root))
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      if (cells.isEmpty) 0
-      else cells.map { c =>
-        f.listStatus(c.getPath).map { s =>
-          if (s.isDirectory && s.getPath.getName.startsWith("seq="))
-            f.listStatus(s.getPath)
-              .count(st => st.isFile && !st.getPath.getName.startsWith("_"))
-          else if (s.isFile && !s.getPath.getName.startsWith("_")) 1
-          else 0
-        }.sum
-      }.max
-    }.getOrElse(0)
-  }
+  def maxFilesPerCell(spark: SparkSession, dir: String): Int =
+    store.maxFilesPerPartition(spark, dir)
 
   /** Maintenance trigger — the serving stores' files-per-bucket policy
     * on the index's cells: true once any cell has accumulated more than
@@ -408,18 +267,15 @@ object VectorIndex {
     */
   def needsCompact(spark: SparkSession, dir: String,
       maxFiles: Int = DefaultMaxFilesPerCell): Boolean =
-    maxFilesPerCell(spark, dir) > maxFiles
+    store.needsCompact(spark, dir, maxFiles)
 
   /** Run [[consolidate]] iff [[needsCompact]]; returns whether it ran.
     * The maintenance entry point for an append loop: call between
     * batches, never under one.
     */
   def maintain(spark: SparkSession, dir: String,
-      maxFiles: Int = DefaultMaxFilesPerCell): Boolean = {
-    val due = needsCompact(spark, dir, maxFiles)
-    if (due) consolidate(spark, dir)
-    due
-  }
+      maxFiles: Int = DefaultMaxFilesPerCell): Boolean =
+    store.maintain(spark, dir, maxFiles)
 
   /** Search the prebuilt index: the probed cells' partitions are the
     * only ones read — deterministically. Under default session confs
@@ -441,18 +297,10 @@ object VectorIndex {
       probes: DataFrame, k: Int, nProbe: Int = 8, rerank: Int = 12,
       probeMargin: Double = 0.0): DataFrame = {
     val (coarse, books) = readCodebooks(spark, dir)
-    // resolve both tables through a possibly-interrupted swap and gate
-    // on the committed seq levels — an append that crashed before its
-    // meta commit is invisible (the seq filter is partition pruning, so
-    // uncommitted partitions also cost nothing); reads never take the
-    // writer's recovery path (single-writer contract)
-    val metaPath = graft.model.StoreSwap.committedPath(spark, metaDir(dir))
-      .getOrElse(sys.error(s"no readable meta under ${metaDir(dir)} — index not built"))
-    val maxSeq = graft.model.OneRowParquet.head(spark, metaPath).getAs[Long]("max_seq")
-    val codesPath = graft.model.StoreSwap.readablePath(spark, codesDir(dir))
-      .getOrElse(sys.error(s"no readable codes under ${codesDir(dir)}"))
-    val codes = spark.read.parquet(codesPath)
-      .where(col("seq") <= lit(maxSeq.toInt))
+    // the committed codes (through a possibly-interrupted swap, gated to
+    // the live seq levels — partition pruning, so uncommitted levels
+    // cost nothing); reads never take the writer's recovery path
+    val (_, codes) = store.read(spark, dir)
     VectorOps.ivfPqSearch(spark, codes, emb,
       probes, coarse, books, k, nProbe, rerank, probeMargin)
   }

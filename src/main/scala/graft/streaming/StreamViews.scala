@@ -913,7 +913,7 @@ object StreamViews {
     // seq= partition, the stats two-rename is the single commit point,
     // the engine batch id rides into stats so a re-delivery after a
     // maintainer crash is a no-op — and an out-of-order id fails loud
-    // via BatchLedger). Folding ANY batching sequentially lands the
+    // via SeqStore.isReplay). Folding ANY batching sequentially lands the
     // same relation as one build, and the downstream apply runs
     // entirely over the store (no text in the pair stages), so the
     // query shares near_dedup_apply's oracle verbatim: the driver
