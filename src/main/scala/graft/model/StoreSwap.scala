@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
 /** Crash-safe directory swap for parquet serving stores. Users:
   * [[FactStore]] consolidation, [[ServingPointer]] (the pointer row),
   * [[SeqStore]] (the ledger row of every append and the data rewrite of
-  * consolidate, under LexIndex, VectorIndex and ShingleStore), and the
-  * speed layer's UpsertStore and LabelStore maintainers.
+  * consolidate, under LexIndex, VectorIndex and ShingleStore), and
+  * [[BucketStore]] (the whole-dir replace of compaction and bootstrap,
+  * under the speed layer's UpsertStore and LabelStore).
   *
   * The naive `delete(store); rename(tmp, store)` has a window where the
   * serving store is ABSENT: a crash between the two calls loses the
@@ -113,9 +114,10 @@ object StoreSwap {
     * fallback cannot classify alone — a committed write whose result
     * is LEGITIMATELY empty, indistinguishable from a crashed job's
     * empty dir — is covered by the writer-dropped [[EmptyMarker]]
-    * sidecar, accepted here like `_SUCCESS`.
+    * sidecar, accepted here like `_SUCCESS`. [[BucketStore]] checks its
+    * staged writes through this rule too.
     */
-  private def isComplete(f: FileSystem, dir: Path): Boolean =
+  private[graft] def isComplete(f: FileSystem, dir: Path): Boolean =
     f.exists(new Path(dir, "_SUCCESS")) || (
       // Both marker-less acceptance paths are gated on NO `_temporary`
       // staging: an EmptyMarker is dropped at (empty-)write commit the

@@ -1,7 +1,7 @@
 package graft.streaming
 
+import graft.model.{BucketStore, StoreSwap}
 import graft.operators.GraphOps
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,41 +16,31 @@ import org.apache.spark.sql.functions._
   * contain a changed or new label; untouched buckets' files are left
   * physically identical (LabelStoreSpec asserts byte-for-byte).
   *
-  * Changed buckets are swapped in with a PER-BUCKET TWO-RENAME (round
-  * 11; before that a dynamic partition overwrite, whose job commit
-  * DELETES a bucket's files before renaming staged replacements in — a
-  * crash in that window left the bucket EMPTY, permanently forgetting
-  * prior labels for nodes not in the replayed batch). Now the new
-  * bucket contents are fully staged under `dir.tmp` first, then each
-  * changed bucket is moved aside to `dir.old/bucket=b` and its staged
-  * replacement renamed in; a crash at any point leaves every bucket at
-  * its OLD or NEW version — never absent, never half-deleted.
-  *
-  * Crash story (granular where StoreSwap is whole-dir):
+  * Changed buckets are swapped in with [[graft.model.BucketStore]]'s
+  * PER-BUCKET TWO-RENAME (round 11; before that a dynamic partition
+  * overwrite, whose job commit DELETES a bucket's files before renaming
+  * staged replacements in — a crash in that window left the bucket
+  * EMPTY, permanently forgetting prior labels for nodes not in the
+  * replayed batch). BucketStore also owns the buckets, the modulus
+  * sidecar, recovery, the whole-dir replace of the bootstrap and
+  * [[compact]], and the trigger; its scaladoc holds the crash story and
+  * the single-writer contract. What this store adds to it:
   *
   *   - Connectivity facts are MONOTONE: an edge once seen never becomes
   *     false, and CC labels only ever decrease (min-id labeling). A
   *     torn fold — some buckets new, some old — is therefore still a
   *     VALID connectivity compression: every (node → label) star edge
   *     it contains is true of the accumulated graph, so folding the
-  *     next batch from it converges to the same labeling.
-  *   - A bucket moved aside but not yet replaced (the one window where
-  *     a bucket is missing from `dir`) is preserved under
-  *     `dir.old/bucket=b`; [[recover]] renames it back, and both
-  *     [[read]] and [[fold]] run it first, so absence is repaired
-  *     before anything interprets it. A staged-but-unswapped `dir.tmp`
-  *     is DISCARDED, not rolled forward: the streaming engine replays
-  *     the uncommitted microbatch, and re-folding the same edges is
-  *     convergent by monotonicity.
-  *   - [[read]] additionally collapses any duplicate rows with
-  *     `min(label)` per node — labels-only-decrease makes min() "the
-  *     newest value", an idempotent repair costing one node-keyed
-  *     aggregation.
-  *
-  * SINGLE-WRITER contract: one maintainer owns folds, [[compact]] and
-  * recovery for a store; [[read]]'s rename-based repair makes even the
-  * serve hook a store-owner call (exactly how stream_cc uses it —
-  * foreachBatch folds, then serves).
+  *     next batch from it converges to the same labeling, and
+  *     re-folding a replayed microbatch whose swap was cut converges.
+  *   - [[read]] and [[lookup]] run [[graft.model.BucketStore.recover]]
+  *     first (a bucket moved aside but not yet replaced is absent from
+  *     `dir`), so absence is repaired before anything interprets it —
+  *     which makes even the serve hook a store-owner call (exactly how
+  *     stream_cc uses it: foreachBatch folds, then serves). They also
+  *     collapse duplicate rows with `min(label)` per node —
+  *     labels-only-decrease makes min() "the newest value", an
+  *     idempotent repair costing one node-keyed aggregation.
   */
 object LabelStore {
 
@@ -68,112 +58,30 @@ object LabelStore {
     */
   val DefaultMaxFilesPerBucket = 16
 
-  private def bucketCol(node: org.apache.spark.sql.Column, n: Int) =
-    pmod(hash(node), lit(n))
+  private def bucketed(rows: DataFrame, n: Int): DataFrame =
+    rows.withColumn("bucket", BucketStore.bucketCol(Seq("node"), n))
 
-  private def tmpDir(dir: String): String = dir + ".tmp"
-  private def oldDir(dir: String): String = dir + ".old"
-
-  private def fs(spark: SparkSession) =
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-
-  /** The per-swap DISPLACEMENT MANIFEST (round 15): [[fold]] stages the
-    * list of buckets its swap loop will move aside as `_displaced`
-    * INSIDE the staging dir, written after the staging job commits and
-    * before the first rename. [[recover]] then restores `.old` buckets
-    * by this record instead of presence-probing the live dir — the
-    * probe could not tell a fold's displaced bucket from a crashed
-    * whole-dir reshard's superseded leftover whose live twin is
-    * legitimately EMPTY (no node hashes there under the new modulus, so
-    * the write created no dir), and restoring the latter injected stale
-    * rows under the old modulus that only the min-fold's monotonicity
-    * absorbed.
-    */
-  private def manifestPath(dir: String) =
-    new Path(tmpDir(dir), "_displaced")
-
-  private def writeManifest(f: org.apache.hadoop.fs.FileSystem,
-      dir: String, buckets: Seq[Int]): Unit = {
-    val out = f.create(manifestPath(dir), true)
-    try out.write(buckets.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def readManifest(f: org.apache.hadoop.fs.FileSystem,
-      dir: String): Option[Set[Int]] =
-    if (!f.exists(manifestPath(dir))) None
-    else {
-      val in = f.open(manifestPath(dir))
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        .split("\n").filter(_.nonEmpty).map(_.toInt).toSet)
-      finally in.close()
-    }
-
-  /** Repair any torn swap. Two `.old` states, disambiguated by the
-    * live dir:
-    *
-    *   - live dir ABSENT: a whole-dir swap crashed between its two
-    *     renames — `.old` is the complete current store; roll it back.
-    *   - live dir present: restore `.old` buckets BY THE DISPLACEMENT
-    *     MANIFEST (round 15 — [[fold]] stages the list of buckets its
-    *     swap loop will move aside as `_displaced` inside `dir.tmp`,
-    *     so the staging dir's lifetime brackets the swap loop's): a
-    *     manifest-listed bucket missing from live is a fold swap's
-    *     displaced bucket, the one window where a bucket is absent — it
-    *     MUST come back or its labels are lost. An `.old` WITHOUT a
-    *     manifest beside a live store can only be a crashed whole-dir
-    *     [[compact]]/reshard swap's SUPERSEDED previous version (the
-    *     fold deletes `.old` strictly before its staging dir, so every
-    *     fold crash state still has the manifest) — it is dropped
-    *     whole, restoring nothing. The r14 presence-probe this
-    *     replaces could not tell the two apart when a reshard's live
-    *     twin was legitimately EMPTY (a GROWING reshard where no node
-    *     hashes into some new bucket creates no dir for it), and
-    *     restored stale old-modulus rows that only the min-fold's
-    *     labels-only-decrease invariant absorbed; the manifest removes
-    *     that reliance for every reshard direction.
-    *
+  /** Repair any torn swap ([[graft.model.BucketStore.recover]]).
     * Idempotent; driver-side metadata ops only. Run by [[fold]],
-    * [[read]] and [[lookup]].
+    * [[read]], [[lookup]] and [[compact]].
     */
-  def recover(spark: SparkSession, dir: String): Unit = {
-    val f = fs(spark)
-    val old = new Path(oldDir(dir))
-    val live = new Path(dir)
-    if (f.exists(old)) {
-      if (!f.exists(live)) {
-        require(f.rename(old, live), s"rollback rename $old -> $live failed")
-      } else {
-        // only the buckets the crashed fold RECORDED displacing may be
-        // restored; no manifest ⇒ superseded whole-swap leftover
-        val displaced = readManifest(f, dir).getOrElse(Set.empty)
-        f.listStatus(old).foreach { st =>
-          val name = st.getPath.getName
-          val listed = scala.util.Try(name.stripPrefix("bucket=").toInt)
-            .toOption.exists(displaced.contains)
-          if (name.startsWith("bucket=") && listed &&
-              !f.exists(new Path(dir, name)))
-            require(f.rename(st.getPath, new Path(dir, name)),
-              s"rollback rename ${st.getPath} failed")
-        }
-        f.delete(old, true)
-      }
-    }
-    val tmp = new Path(tmpDir(dir))
-    if (f.exists(tmp)) f.delete(tmp, true)
+  def recover(spark: SparkSession, dir: String): Unit = BucketStore.recover(spark, dir)
+
+  /** The store's root after [[recover]]; None if never written. */
+  private def repaired(spark: SparkSession, dir: String): Option[String] = {
+    recover(spark, dir)
+    StoreSwap.readablePath(spark, dir)
   }
+
+  private def minLabel(rows: DataFrame): DataFrame =
+    rows.groupBy("node").agg(min("label").as("label"))
 
   /** Current labeling: (node, label), torn swaps repaired by
     * [[recover]] and torn-commit duplicates by the min-fold. Returns
     * None if the store has never been written.
     */
-  def read(spark: SparkSession, dir: String): Option[DataFrame] = {
-    recover(spark, dir)
-    val f = fs(spark)
-    if (!f.exists(new Path(dir))) None
-    else Some(spark.read.parquet(dir)
-      .groupBy("node").agg(min("label").as("label")))
-  }
+  def read(spark: SparkSession, dir: String): Option[DataFrame] =
+    repaired(spark, dir).map(root => minLabel(spark.read.parquet(root)))
 
   /** Fold one edge batch into the store, AFFECTED-COMPONENT scoped:
     * only the components the batch touches are read into the CC
@@ -196,11 +104,16 @@ object LabelStore {
     *      in (a torn store can leave a stale seed label whose scoped
     *      component misses a node's newest link; the node's newer —
     *      smaller — on-disk label then wins the min and no connectivity
-    *      is ever forgotten). Changed-bucket-sized shuffle, STAGED to
-    *      `dir.tmp` (the plan reads the live buckets while writing
-    *      elsewhere — no lineage cut needed), then swapped in
-    *      per-bucket by two renames (see the object scaladoc for why
-    *      not dynamic partition overwrite).
+    *      is ever forgotten). Changed-bucket-sized shuffle, swapped in
+    *      per bucket by [[graft.model.BucketStore.swapBuckets]] (the
+    *      plan reads the live buckets while staging elsewhere — no
+    *      lineage cut needed).
+    *
+    * Self-loops carry no connectivity and are dropped first, so a batch
+    * of only self-loops folds to nothing like an empty one (and never
+    * bootstraps a store holding no labels). The first non-empty batch
+    * bootstraps the store: its full labeling, all buckets, through the
+    * whole-dir [[graft.model.BucketStore.replace]].
     *
     * Cost shape per fold at 100 TB: two column-pruned store SCANS (the
     * affected discovery cannot be partition-pruned — membership of a
@@ -215,88 +128,39 @@ object LabelStore {
     // an empty batch folds to nothing — and must not bootstrap an
     // empty DIRECTORY (a dir holding only _SUCCESS fails schema
     // inference on the next read; cheap limit-1 probe)
-    if (edges.isEmpty) return
-    recover(spark, dir)
-    val f = fs(spark)
-    if (!f.exists(new Path(dir))) {
-      // bootstrap: full labeling, all buckets — staged then renamed in
-      // as ONE atomic dir rename, so a crashed bootstrap leaves only
-      // discarded staging, never a torn store the next fold would
-      // mistake for a complete labeling
-      val tmp = tmpDir(dir)
-      GraphOps.connectedComponents(edges)
-        .withColumn("bucket", bucketCol(col("node"), nBuckets))
-        // one file per bucket (the compact discipline): without this
-        // every labeling shuffle partition opens a writer in every
-        // bucket dir — partitions × buckets files from the bootstrap on
-        .repartition(col("bucket"))
-        .write.partitionBy("bucket").parquet(tmp)
-      require(f.exists(new Path(tmp, "_SUCCESS")), s"torn bootstrap write at $tmp")
-      require(f.rename(new Path(tmp), new Path(dir)),
-        s"bootstrap rename $tmp -> $dir failed")
-      BucketMeta.write(spark, dir, nBuckets)
-    } else {
-      // enforce (and, for pre-sidecar stores, record) the store's bucket
-      // modulus: folding with a different count would scatter a node's
-      // labels across incompatible partitionings and break the changed-
-      // bucket detection
-      BucketMeta.read(spark, dir).foreach { n =>
-        require(n == nBuckets,
-          s"store at $dir was built with nBuckets=$n; fold got $nBuckets")
-      }
+    val linked = edges.where(col("src") =!= col("dst"))
+    if (linked.isEmpty) return
+    if (repaired(spark, dir).isEmpty)
+      BucketStore.replace(spark, dir,
+        bucketed(GraphOps.connectedComponents(linked), nBuckets), Some(nBuckets))
+    else {
+      BucketStore.pinModulus(spark, dir, nBuckets)
       val store = spark.read.parquet(dir).select("node", "label", "bucket")
-      val batchNodes = edges.select(col("src").as("node"))
-        .unionAll(edges.select(col("dst").as("node"))).distinct()
+      val batchNodes = linked.select(col("src").as("node"))
+        .unionAll(linked.select(col("dst").as("node"))).distinct()
       val seedLabels = store.join(broadcast(batchNodes), Seq("node"))
         .select("label").distinct()
       val affected = store
         .join(broadcast(seedLabels), Seq("label"), "left_semi")
         .select("node", "label")
         .localCheckpoint() // feeds the CC iterations AND the change diff
-      val updated = GraphOps.connectedComponentsIncremental(affected, edges)
+      val updated = bucketed(GraphOps.connectedComponentsIncremental(affected, linked), nBuckets)
       val oldMin = affected.groupBy("node").agg(min("label").as("old_label"))
       val changedBuckets = updated
         .join(oldMin, Seq("node"), "left_outer")
         .where(col("old_label").isNull || col("old_label") =!= col("label"))
-        .select(bucketCol(col("node"), nBuckets).as("bucket")).distinct()
+        .select("bucket").distinct()
         .collect().map(_.getInt(0)).toSeq
       if (changedBuckets.nonEmpty) {
-        val updatedB = updated
-          .withColumn("bucket", bucketCol(col("node"), nBuckets))
-          .where(col("bucket").isin(changedBuckets: _*))
-        val toWrite = store
-          .where(col("bucket").isin(changedBuckets: _*)) // partition-pruned
-          .unionByName(updatedB.select("node", "label", "bucket"))
-          .groupBy("node", "bucket").agg(min("label").as("label"))
-          .select("node", "label", "bucket")
-        // stage the new bucket contents OUTSIDE the store, then swap
-        // each changed bucket in with two renames — a crash leaves the
-        // bucket at its old or new version, never deleted-not-replaced
-        val tmp = tmpDir(dir)
-        // one staged file per changed bucket, not one per shuffle
-        // partition per bucket (the bootstrap/compact discipline)
-        toWrite.repartition(col("bucket"))
-          .write.partitionBy("bucket").parquet(tmp)
-        require(f.exists(new Path(tmp, "_SUCCESS")), s"torn staging write at $tmp")
-        // record WHICH buckets the swap loop is about to move aside —
-        // recover restores by this manifest, never by presence-probing
-        writeManifest(f, dir, changedBuckets)
-        val old = new Path(oldDir(dir))
-        f.mkdirs(old)
-        changedBuckets.foreach { b =>
-          val live = new Path(dir, s"bucket=$b")
-          val staged = new Path(tmp, s"bucket=$b")
-          if (f.exists(staged)) {
-            if (f.exists(live))
-              require(f.rename(live, new Path(old, s"bucket=$b")),
-                s"swap rename $live aside failed")
-            require(f.rename(staged, live), s"swap rename $staged in failed")
-          }
-        }
-        f.delete(old, true)
-        f.delete(new Path(tmp), true)
+        val changed = col("bucket").isin(changedBuckets: _*)
+        BucketStore.swapBuckets(spark, dir,
+          store.where(changed) // partition-pruned
+            .unionByName(updated.where(changed).select("node", "label", "bucket"))
+            .groupBy("node", "bucket").agg(min("label").as("label"))
+            .select("node", "label", "bucket"),
+          changedBuckets)
       }
-      BucketMeta.write(spark, dir, nBuckets) // heals pre-sidecar stores
+      BucketStore.recordModulus(spark, dir, nBuckets) // heals pre-sidecar stores
     }
   }
 
@@ -304,61 +168,26 @@ object LabelStore {
     * id-normalization output feeds query-time rewrites; a serving layer
     * resolves a handful of node ids, not the labeling): the current
     * label of each node in `nodes`, reading ONLY those nodes' bucket
-    * directories. Bucket ids are computed DRIVER-SIDE by evaluating the
-    * same `pmod(hash(node), n)` expression folds partition by (zero
-    * Spark jobs — Catalyst interpreted eval over literals, cast to the
-    * store's node type under the session timezone), pushed as a static
-    * `bucket IN (...)` partition filter, so the scan reads
-    * ≤ |distinct buckets(nodes)| of the store's `bucket=` dirs; the
-    * min-fold repairs torn-commit duplicates exactly as [[read]] does.
-    * Results ≡ `read(...).filter(node in nodes)` (LabelStoreSpec pins
-    * both the equivalence and the partition count).
+    * directories ([[graft.model.BucketStore.lookup]]: driver-side bucket
+    * ids, cast to the store's node type); the min-fold repairs
+    * torn-commit duplicates exactly as [[read]] does. Results ≡
+    * `read(...).filter(node in nodes)` (LabelStoreSpec pins both the
+    * equivalence and the partition count).
     *
-    * The modulus comes from the store's own [[BucketMeta]] sidecar —
-    * never trusted from a parameter (a wrong one hashes nodes into
-    * buckets the filter then excludes: an existing node silently
-    * resolving to nothing). `nBuckets` remains only as an explicit
-    * override for pre-sidecar stores (0 = read the sidecar, the
-    * default). None if the store has never been written.
+    * The modulus comes from the store's own sidecar — never trusted from
+    * a parameter. `nBuckets` remains only as an explicit override for
+    * pre-sidecar stores (0 = read the sidecar, the default). None if the
+    * store has never been written.
     */
   def lookup(spark: SparkSession, dir: String, nodes: Seq[Any],
-      nBuckets: Int = 0): Option[DataFrame] = {
-    recover(spark, dir)
-    val f = fs(spark)
-    if (!f.exists(new Path(dir))) None
-    else Some {
-      require(nodes.nonEmpty, "lookup needs at least one node id")
-      val n =
-        if (nBuckets > 0) nBuckets
-        else BucketMeta.read(spark, dir).getOrElse(sys.error(
-          s"store at $dir has no readable bucket-count sidecar " +
-            "(pre-r12 store?); pass nBuckets explicitly"))
-      val store = spark.read.parquet(dir)
-      val nodeType = store.schema("node").dataType
-      import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Murmur3Hash, Pmod}
-      val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
-      val bucketIds = nodes.map { v =>
-        val l = Literal(Cast(Literal(v), nodeType, tz).eval(null), nodeType)
-        Pmod(new Murmur3Hash(Seq(l)), Literal(n)).eval(null).asInstanceOf[Int]
-      }.distinct
-      store
-        .where(col("bucket").isin(bucketIds: _*) && col("node").isin(nodes: _*))
-        .groupBy("node").agg(min("label").as("label"))
+      nBuckets: Int = 0): Option[DataFrame] =
+    repaired(spark, dir).map { root =>
+      minLabel(BucketStore.lookup(spark, root, Seq("node"), nodes.map(Seq(_)), nBuckets))
     }
-  }
 
   /** Part-file count of the fullest bucket (driver metadata only). */
-  def maxFilesPerBucket(spark: SparkSession, dir: String): Int = {
-    val f = fs(spark)
-    if (!f.exists(new Path(dir))) 0
-    else {
-      val buckets = f.listStatus(new Path(dir))
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("bucket="))
-      if (buckets.isEmpty) 0
-      else buckets.map(b => f.listStatus(b.getPath)
-        .count(st => st.isFile && !st.getPath.getName.startsWith("_"))).max
-    }
-  }
+  def maxFilesPerBucket(spark: SparkSession, dir: String): Int =
+    BucketStore.maxFilesPerBucket(spark, dir)
 
   /** Maintenance trigger: a fold rewrites a changed bucket with up to
     * one file per shuffle partition, so hot buckets drift above the
@@ -366,34 +195,27 @@ object LabelStore {
     */
   def needsCompact(spark: SparkSession, dir: String,
       maxFiles: Int = DefaultMaxFilesPerBucket): Boolean =
-    maxFilesPerBucket(spark, dir) > maxFiles
+    BucketStore.needsCompact(spark, dir, maxFiles)
 
   /** Rewrite the whole labeling at ~1 file per bucket (min-per-node
-    * collapses any torn-commit duplicates in the same pass), swapped in
-    * with the whole-dir [[graft.model.StoreSwap]] protocol. Run in
-    * maintenance windows, not under a live fold.
+    * collapses any torn-commit duplicates in the same pass) through the
+    * whole-dir [[graft.model.BucketStore.replace]]. Run in maintenance
+    * windows, not under a live fold.
     *
     * PINNED to the store's recorded bucket count by default
-    * (`nBuckets = 0` reads the [[BucketMeta]] sidecar): compacting
-    * under a different modulus than folds use would change the
-    * partitioning the delta detection keys on. Passing an explicit
-    * count is a deliberate RESHARD — the sidecar is rewritten to the
-    * new modulus (it rides the swap), so subsequent folds must use it.
+    * (`nBuckets = 0` reads the sidecar): compacting under a different
+    * modulus than folds use would change the partitioning the delta
+    * detection keys on. Passing an explicit count is a deliberate
+    * RESHARD — the sidecar is rewritten to the new modulus (it rides the
+    * swap), so subsequent folds must use it.
     */
   def compact(spark: SparkSession, dir: String,
       nBuckets: Int = 0): Unit = {
-    recover(spark, dir) // also discards any stale staging at tmpPath
+    recover(spark, dir)
     val n =
       if (nBuckets > 0) nBuckets
-      else BucketMeta.read(spark, dir).getOrElse(DefaultBuckets)
-    val tmp = graft.model.StoreSwap.tmpPath(dir)
-    spark.read.parquet(dir)
-      .groupBy("node").agg(min("label").as("label"))
-      .withColumn("bucket", bucketCol(col("node"), n))
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket").parquet(tmp)
-    BucketMeta.write(spark, tmp, n) // rides the swap into `dir`
-    graft.model.StoreSwap.commit(spark, dir)
+      else BucketStore.modulus(spark, dir).getOrElse(DefaultBuckets)
+    BucketStore.replace(spark, dir, bucketed(minLabel(spark.read.parquet(dir)), n), Some(n))
   }
 
   /** Run [[compact]] iff [[needsCompact]]; returns whether it ran.
@@ -401,9 +223,6 @@ object LabelStore {
     */
   def maintain(spark: SparkSession, dir: String,
       maxFiles: Int = DefaultMaxFilesPerBucket,
-      nBuckets: Int = 0): Boolean = {
-    val due = needsCompact(spark, dir, maxFiles)
-    if (due) compact(spark, dir, nBuckets)
-    due
-  }
+      nBuckets: Int = 0): Boolean =
+    BucketStore.maintain(spark, dir, maxFiles)(compact(spark, dir, nBuckets))
 }

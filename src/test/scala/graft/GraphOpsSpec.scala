@@ -56,7 +56,7 @@ class GraphOpsSpec extends SparkSpec {
       def run(): Set[(Long, Long)] = GraphOps.connectedComponents(edges)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val local = run() // default threshold: these all take the local route
-      spark.conf.set("graft.cc.localMaxEdges", "0") // force the loop
+      spark.conf.set("graft.cc.localMaxEdges", "-1") // force the loop
       val dist = try run() finally spark.conf.unset("graft.cc.localMaxEdges")
       assert(local == dist, s"shape $i: local route diverged from the loop")
     }

@@ -115,6 +115,20 @@ class LabelStoreSpec extends SparkSpec {
     assert(labelsOf(dir) == Map(1L -> 1L, 2L -> 1L))
   }
 
+  test("a self-loop-only first batch folds to nothing: the store stays readable") {
+    // a bootstrap from self-loops alone used to commit a store holding no
+    // part files, after which every read, lookup and fold threw
+    // UNABLE_TO_INFER_SCHEMA
+    val dir = freshDir()
+    LabelStore.fold(spark, dir, Seq((5L, 5L), (6L, 6L)).toDF("src", "dst"))
+    assert(LabelStore.read(spark, dir).isEmpty && LabelStore.lookup(spark, dir, Seq(5L)).isEmpty,
+      "a self-loop-only first batch must not create an unreadable store")
+    LabelStore.fold(spark, dir, Seq((1L, 2L), (7L, 7L)).toDF("src", "dst"))
+    LabelStore.fold(spark, dir, Seq((2L, 2L)).toDF("src", "dst"))
+    assert(labelsOf(dir) == Map(1L -> 1L, 2L -> 1L))
+    assert(LabelStore.lookup(spark, dir, Seq(2L)).get.as[(Long, Long)].collect().toSeq == Seq(2L -> 1L))
+  }
+
   test("min-fold read repairs torn-commit duplicates (labels only decrease)") {
     val dir = freshDir()
     LabelStore.fold(spark, dir, Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"))
@@ -261,7 +275,7 @@ class LabelStoreSpec extends SparkSpec {
     Seq((1L, 1L), (2L, 1L)).toDF("node", "label")
       .withColumn("bucket", lit(0))
       .coalesce(1).write.partitionBy("bucket").parquet(dir)
-    graft.streaming.BucketMeta.write(spark, dir, 4)
+    graft.model.BucketStore.recordModulus(spark, dir, 4)
     val want = labelsOf(dir)
     // the superseded pre-reshard version (modulus 2): bucket=1 is
     // IN-modulus for the live sidecar (1 < 4) and missing from live —

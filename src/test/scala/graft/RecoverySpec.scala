@@ -290,6 +290,39 @@ class RecoverySpec extends SparkSpec {
     }
   }
 
+  test("bucket stores fold, look up and compact under a markers-disabled session") {
+    // LabelStore used to require `_SUCCESS` on its staged writes, so every
+    // bootstrap and every fold threw under marksuccessfuljobs=false; the
+    // staged writes are now checked through StoreSwap's completeness rule
+    import graft.streaming.{LabelStore, UpsertStore}
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.setBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", false)
+    try {
+      val up = Files.createTempDirectory("graft_mo_up").toString + "/store"
+      val keys = Seq("k")
+      UpsertStore.fold(spark, up, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), keys, seq = 0)
+      UpsertStore.fold(spark, up, Seq((2L, "b1")).toDF("k", "v"), keys, seq = 1)
+      assert(!hfs.exists(hp(s"$up/_SUCCESS")), "fixture: the session must write no markers")
+      UpsertStore.compact(spark, up, keys)
+      assert(UpsertStore.lookup(spark, up, keys, Seq(Seq(2L))).get
+        .as[(Long, String)].collect().toSeq == Seq(2L -> "b1"))
+      assert(UpsertStore.read(spark, up, keys).get.as[(Long, String)].collect().toMap ==
+        Map(1L -> "a", 2L -> "b1"))
+
+      val lb = Files.createTempDirectory("graft_mo_lb").toString + "/labels"
+      LabelStore.fold(spark, lb, Seq((1L, 2L), (3L, 4L)).toDF("src", "dst")) // bootstrap
+      LabelStore.fold(spark, lb, Seq((2L, 3L)).toDF("src", "dst")) // per-bucket swap
+      assert(!hfs.exists(hp(s"$lb/_SUCCESS")), "fixture: the session must write no markers")
+      assert(LabelStore.lookup(spark, lb, Seq(4L)).get.as[(Long, Long)].collect().toSeq == Seq(4L -> 1L))
+      LabelStore.compact(spark, lb)
+      assert(LabelStore.read(spark, lb).get.as[(Long, Long)].collect().toMap ==
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+      Seq(up, lb).foreach { d =>
+        assert(!hfs.exists(hp(StoreSwap.tmpPath(d))) && !hfs.exists(hp(StoreSwap.oldPath(d))))
+      }
+    } finally hc.setBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", true)
+  }
+
   test("StoreSwap rolls back a mid-swap crash whose tmp is ALSO torn (old=v1, tmp torn, store absent)") {
     val store = Files.createTempDirectory("graft_swap_rb").toString + "/store"
     writeVersion(StoreSwap.oldPath(store), "v1", 10)
